@@ -88,6 +88,7 @@ object CompiledPlan {
         spec.computed.map(c => Seq(c._1, c._2).asJava).asJava)
       t.put("metadataCols",
         spec.metadataCols.map(c => Seq(c._1, c._2).asJava).asJava)
+      t.put("options", spec.options.asJava)
       t
     }
     root.put("tables", tables.asJava)
@@ -134,7 +135,9 @@ object CompiledPlan {
           computed = t.path("computed").elements().asScala
             .map(n => (n.get(0).asText(), n.get(1).asText())).toSeq,
           metadataCols = t.path("metadataCols").elements().asScala
-            .map(n => (n.get(0).asText(), n.get(1).asText())).toSeq))
+            .map(n => (n.get(0).asText(), n.get(1).asText())).toSeq,
+          options = t.path("options").properties().asScala
+            .map(e => e.getKey -> e.getValue.asText()).toMap))
       }
     }
     // views after tables; retry to honor view-on-view dependency order

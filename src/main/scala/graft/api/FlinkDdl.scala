@@ -261,7 +261,8 @@ object FlinkDdl {
       schema = if (fields.isEmpty) None else Some(StructType(fields)),
       watermark = watermark, primaryKey = primaryKey,
       partitions = partitions, proctime = proctime,
-      computed = computed, metadataCols = metaCols))
+      computed = computed, metadataCols = metaCols,
+      options = options -- Seq("connector", "path", "format")))
   }
 
   /** `PARTITIONED BY (c1, c2)` — reference filesystem-connector

@@ -31,7 +31,11 @@ final case class TableSpec(
     // (reference SqlMetadataColumn, SqlTableColumn.java:136) — for the
     // filesystem connector the keys map onto Spark's _metadata struct:
     // file.path / file.name / file.size / file.modification-time
-    metadataCols: Seq[(String, String)] = Nil) // (colName, metadataKey)
+    metadataCols: Seq[(String, String)] = Nil, // (colName, metadataKey)
+    // the DDL's other WITH options (Flink keys, e.g. 'csv.field-delimiter'
+    // or 'maxFilesPerTrigger'), applied as reader options on streaming
+    // reads
+    options: Map[String, String] = Map.empty)
 
 /** ANALYZE TABLE output: row count plus per-column (nullCount, ndv). */
 final case class TableStats(rowCount: Long,
@@ -140,7 +144,8 @@ final class TableEnv(val spark: SparkSession) {
 
   /** Streaming `from`: file-monitoring source with the declared
     * watermark applied (reference: watermark DDL + pushdown,
-    * StreamExecWatermarkAssigner.java). */
+    * StreamExecWatermarkAssigner.java) and the DDL's WITH options as
+    * reader options — e.g. 'maxFilesPerTrigger' bounds each trigger. */
   def fromStreaming(name: String): DataFrame = {
     val spec = specs.getOrElse(name,
       throw new IllegalArgumentException(s"unknown table $name"))
@@ -148,7 +153,7 @@ final class TableEnv(val spark: SparkSession) {
     val schema = spec.schema.getOrElse(StructType(batchRead(spec).schema
       .filterNot(f => virtual.contains(f.name))))
     val df0 = spark.readStream.schema(schema).format(spec.format)
-      .load(spec.path)
+      .options(readerOptions(spec.options, spec.format)).load(spec.path)
     // virtual columns first (a computed column may BE the watermarked
     // event-time column — the reference's computed-watermark idiom),
     // then the watermark
@@ -266,9 +271,9 @@ final class TableEnv(val spark: SparkSession) {
        |${(cols ++ pt ++ wm ++ pk).mkString(",\n")}
        |)$part
        |WITH (
-       |  'connector' = 'filesystem',
-       |  'path' = '${spec.path}',
-       |  'format' = '${spec.format}'
+       |${(Seq("connector" -> "filesystem", "path" -> spec.path,
+             "format" -> spec.format) ++ spec.options.toSeq.sorted)
+           .map { case (k, v) => s"  '$k' = '$v'" }.mkString(",\n")}
        |)""".stripMargin
   }
 
@@ -300,6 +305,15 @@ final class TableEnv(val spark: SparkSession) {
       case other => (other, value)
     }
 
+  /** WITH options of a `fmt` table → Spark reader options:
+    * 'csv.field-delimiter'-style keys strip their format prefix. */
+  private def readerOptions(opts: Map[String, String],
+      fmt: String): Map[String, String] =
+    opts.map { case (k, v) =>
+      readerOption(if (k.startsWith(fmt + ".")) k.substring(fmt.length + 1)
+        else k, v)
+    }
+
   private def optionsView(table: String, optsBody: String): String = {
     val spec = specs.getOrElse(table, throw new IllegalArgumentException(
       s"OPTIONS hint: $table is not a DDL-registered table"))
@@ -309,13 +323,7 @@ final class TableEnv(val spark: SparkSession) {
       "OPTIONS hint: only the filesystem connector is supported")
     val path = opts.getOrElse("path", spec.path)
     val fmt = opts.getOrElse("format", spec.format)
-    val reader = (opts -- Seq("path", "format", "connector")).map {
-      case (k, v) =>
-        // 'csv.field-delimiter'-style keys strip their format prefix
-        val key = if (k.startsWith(fmt + ".")) k.substring(fmt.length + 1)
-          else k
-        readerOption(key, v)
-    }
+    val reader = readerOptions(opts -- Seq("path", "format", "connector"), fmt)
     val r0 = spark.read.format(fmt).options(reader)
     // the declared schema only applies while the format is unchanged
     val r = if (fmt == spec.format) spec.schema.fold(r0)(s => r0.schema(s))

@@ -137,18 +137,32 @@ package object functions {
     else arityErr(name, s"expects 1 argument, got ${exprs.length}")
   }
 
-  /** Idempotently register all graft SQL functions on a session. */
+  /** Function registries that already hold every graft function. Keyed
+    * weakly on the registry object itself: a new session has its own
+    * registry and still gets the functions, and a dropped session's
+    * registry is not kept alive here. */
+  private val registered = new java.util.WeakHashMap[
+    org.apache.spark.sql.catalyst.analysis.FunctionRegistry, java.lang.Boolean]
+
+  /** Register all graft SQL functions on a session, once per session:
+    * every TableEnv calls this, and re-registering would replace each
+    * function with an identical one (one WARN line per function). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+    registered.synchronized {
+      if (!registered.containsKey(reg)) {
+        builders.foreach { case (name, b) =>
+          reg.createOrReplaceTempFunction(name, b, "built-in")
+        }
+        spark.udf.register("weighted_avg",
+          org.apache.spark.sql.functions.udaf(new Aggregators.WeightedAvg))
+        // COLLECT → MULTISET as MAP<elem, INT> (string elements; the
+        // reference's multiset of other types maps via CAST at the call
+        // site). FlinkSqlDialect rewrites COLLECT(x) to this name.
+        spark.udf.register("collect_multiset",
+          org.apache.spark.sql.functions.udaf(new Aggregators.CollectMultiset))
+        registered.put(reg, java.lang.Boolean.TRUE)
+      }
     }
-    spark.udf.register("weighted_avg",
-      org.apache.spark.sql.functions.udaf(new Aggregators.WeightedAvg))
-    // COLLECT → MULTISET as MAP<elem, INT> (string elements; the
-    // reference's multiset of other types maps via CAST at the call
-    // site). FlinkSqlDialect rewrites COLLECT(x) to this name.
-    spark.udf.register("collect_multiset",
-      org.apache.spark.sql.functions.udaf(new Aggregators.CollectMultiset))
   }
 }

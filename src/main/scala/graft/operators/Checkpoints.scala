@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** Deterministic release for iterative localCheckpoints.
   *
@@ -20,8 +20,15 @@ import org.apache.spark.sql.DataFrame
   * on the SparkContext (e.g. gateway statements), unlike a
   * getPersistentRDDs before/after diff which would capture and later
   * destroy a concurrent computation's unrecomputable blocks.
+  *
+  * Loops that also need a driver-side scalar over the fresh iterate
+  * (a convergence count, a normalization max, corpus statistics) take
+  * it with [[trackedMeasured]], which folds the scalars into the
+  * checkpoint's own materializing job.
   */
 private[graft] object Checkpoints {
+
+  private val observations = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Eager localCheckpoint plus a release() handle that unpersists
     * exactly this checkpoint's blocks. release() must only be called
@@ -33,18 +40,32 @@ private[graft] object Checkpoints {
     (out, () => rdd.foreach(_.unpersist(blocking = false)))
   }
 
-  /** [[tracked]] that ALSO returns the row count, in ONE action: the
-    * checkpoint is taken lazily and the count job is what materializes
-    * (and persists) it. Convergence-checked loops (k-core's per-round
-    * live-edge count) previously paid two jobs per round — eager
-    * checkpoint materialization, then a separate count over the fresh
-    * blocks; at 100 TB that second pass re-reads the whole round's
-    * working set. */
-  def trackedCounted(df: DataFrame): (DataFrame, Long, () => Unit) = {
-    val out = df.localCheckpoint(false)
-    val rdd = org.apache.spark.sql.graftbridge.ColumnBridge.backingRdd(out)
-    val n = out.count() // first action over the marked RDD: computes,
-                        // persists the blocks, and counts in one pass
-    (out, n, () => rdd.foreach(_.unpersist(blocking = false)))
+  /** [[tracked]] that ALSO returns `scalars` (aggregate columns, e.g.
+    * `count(lit(1))`, `max(c)`) evaluated over the checkpointed rows,
+    * as one Row in argument order — all in the checkpoint's ONE
+    * materializing job. The frame is wrapped in `observe`, so each
+    * task folds its rows into the CollectMetrics accumulators while it
+    * writes the checkpoint blocks: no aggregate exchange, no second
+    * job over the fresh blocks, no broadcast back into the plan. Any
+    * shuffle BELOW `df` still runs as its own map-stage job.
+    *
+    * The values are read from the checkpoint's own QueryExecution once
+    * the action has returned, not through an `Observation`: that
+    * arrives on the asynchronous listener bus, and a failed job (or a
+    * dropped listener event) would leave `Observation.get` blocked
+    * forever. Here a failed job throws out of the checkpoint call.
+    *
+    * Aggregates over an empty frame follow SQL: count is 0, sum/max
+    * are null. */
+  def trackedMeasured(df: DataFrame, scalars: Column*)
+      : (DataFrame, Row, () => Unit) = {
+    require(scalars.nonEmpty, "trackedMeasured needs at least one scalar")
+    val name = s"__graft_checkpoint_${observations.incrementAndGet()}"
+    val observed = df.observe(name, scalars.head, scalars.tail: _*)
+    val (out, release) = tracked(observed)
+    val row = observed.queryExecution.observedMetrics.getOrElse(name,
+      throw new IllegalStateException(
+        s"checkpoint job reported no metrics for $name"))
+    (out, row, release)
   }
 }

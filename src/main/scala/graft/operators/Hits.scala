@@ -24,9 +24,10 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape: the distinct edge list is persisted ONCE, partitioned
   * on the hub key; each half-iteration is one join against a
   * node-sized score table + one shuffle on the opposite key for the
-  * sum; the MAX is a broadcast scalar. Score tables are materialized
-  * with eager localCheckpoint so lineage never grows with the
-  * iteration count. State per node is O(1).
+  * sum. The sum tables are materialized with a tracked eager
+  * localCheckpoint whose job also observes the side's MAX, which enters
+  * the normalization as a driver-side scalar; lineage never grows with
+  * the iteration count. State per node is O(1).
   */
 object Hits {
 
@@ -45,21 +46,15 @@ object Hits {
       .persist(StorageLevel.MEMORY_AND_DISK)
     var hub = e.select(col("hub_id")).distinct().withColumn("hub", lit(1.0))
     var auth: DataFrame = null
-    // checkpoint + normalization denominator in ONE action per
-    // half-iteration (the Checkpoints.trackedCounted pattern): the
-    // lazy checkpoint's materializing action is the max aggregate
-    // itself, and the max rides to the driver as that job's result —
-    // a driver-side scalar, exactly the single row the previous
-    // crossJoin(broadcast(asum.agg(max))) formulation collected anyway,
-    // minus the BroadcastExchange build and the nested-loop-join node
-    // per half-iteration. The division is the same IEEE op against the
-    // same max, so scores are bit-identical.
-    def checkpointWithMax(df: DataFrame): (DataFrame, Double, () => Unit) = {
-      val out = df.localCheckpoint(false)
-      val rdd = org.apache.spark.sql.graftbridge.ColumnBridge.backingRdd(out)
-      val r = out.agg(max(col("s"))).head() // materializes the checkpoint
-      val mx = if (r.isNullAt(0)) Double.NaN else r.getDouble(0) // empty side
-      (out, mx, () => rdd.foreach(_.unpersist(blocking = false)))
+    // checkpoint + normalization denominator in ONE job per
+    // half-iteration (Checkpoints.trackedMeasured): the max rides the
+    // checkpoint's own materializing job as an observed metric — no
+    // separate max aggregate over the fresh blocks, no broadcast of the
+    // scalar back into the plan. The division is the same IEEE op
+    // against the same max, so scores are bit-identical.
+    def checkpointSum(df: DataFrame): (DataFrame, Double, () => Unit) = {
+      val (out, r, release) = Checkpoints.trackedMeasured(df, max(col("s")))
+      (out, if (r.isNullAt(0)) Double.NaN else r.getDouble(0), release) // NaN: empty side
     }
     // deterministic block release: hsum_{t-1} frees once asum_t
     // materializes (hub_t is a lazy view over it); asum_t frees once
@@ -67,12 +62,11 @@ object Hits {
     // auth/hub projections feed the output
     var releaseHsum: () => Unit = () => ()
     for (i <- 1 to iterations) {
-      // checkpoint the SUM table, not the normalized scores: `asum`
-      // feeds both the max scalar and the main select, so an
-      // unmaterialized asum would run the edge join + groupBy twice
-      // per half-iteration. The normalization itself is a node-sized
-      // scan with a literal divisor — cheap to leave lazy.
-      val (asum, amax, releaseAsum) = checkpointWithMax(
+      // checkpoint the SUM table, not the normalized scores: the max
+      // must be known over the sums before any score can be normalized,
+      // and the normalization itself is a node-sized scan with a scalar
+      // divisor — cheap to leave lazy over the checkpoint.
+      val (asum, amax, releaseAsum) = checkpointSum(
         e.join(hub, Seq("hub_id"))
           .groupBy(col("auth_id")).agg(sum(col("hub")).as("s")))
       releaseHsum()
@@ -85,7 +79,7 @@ object Hits {
       auth = asum.select(col("auth_id"),
         (floor(col("s") / graft.functions.StableScalar.col(amax) * Q)
           / lit(Q.toDouble)).as("auth"))
-      val (hsum, hmax, rh) = checkpointWithMax(
+      val (hsum, hmax, rh) = checkpointSum(
         e.join(auth, Seq("auth_id"))
           .groupBy(col("hub_id")).agg(sum(col("auth")).as("s")))
       if (i < iterations) releaseAsum()

@@ -14,14 +14,15 @@ import org.apache.spark.sql.functions._
   * semi-join to drop edges touching sub-k nodes. Rounds are
   * barrier-synchronous (like every Pregel-style loop here); per-round
   * work is linear in the live edge count and the live set only
-  * shrinks. A tracked eager checkpoint after each round caps lineage
-  * AND releases the previous round's blocks deterministically
-  * ([[Checkpoints.tracked]] — relying on the ContextCleaner retained
-  * R rounds of edge copies). The k-core is UNIQUE (the
-  * maximal subgraph with min degree >= k), which is what lets the gate
-  * oracle certify the result exactly: (a) every survivor keeps >= k
-  * surviving neighbors, (b) every removed node has < k surviving
-  * neighbors — (a)+(b) hold only for the true k-core.
+  * shrinks. A tracked eager checkpoint after each round caps lineage,
+  * counts the live edges in the same job, AND releases the previous
+  * round's blocks deterministically ([[Checkpoints.trackedMeasured]] —
+  * relying on the ContextCleaner retained R rounds of edge copies).
+  * The k-core is UNIQUE (the maximal subgraph with min degree >= k),
+  * which is what lets the gate oracle certify the result exactly:
+  * (a) every survivor keeps >= k surviving neighbors, (b) every removed
+  * node has < k surviving neighbors — (a)+(b) hold only for the true
+  * k-core.
   *
   * Reference has no k-core operator; this rides the same edge tables
   * as [[PageRank]]/[[Hits]] (Gelly, the reference's graph library, is
@@ -43,10 +44,10 @@ object KCore {
     // fresh checkpoint first (read + write + 2 reads of the copy) was
     // a whole wasted pass over the full edge set at any scale. Inputs
     // that DO re-run real work per scan (joins/aggregates/explodes
-    // below) keep the materializing trackedCounted.
+    // below) keep the materializing checkpoint, counted by its own job.
     var (live, n, release) =
       if (cheapToRescan(pre)) (pre, pre.count(), () => ())
-      else Checkpoints.trackedCounted(pre)
+      else checkpointCounted(pre)
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
@@ -56,7 +57,7 @@ object KCore {
       // per peel round; the hash semi-join streams the edges unsorted.
       val keep = live.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src")).hint("shuffle_hash")
-      val (next, m, releaseNext) = Checkpoints.trackedCounted(live
+      val (next, m, releaseNext) = checkpointCounted(live
         .join(keep, Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
         .select(col("src"), col("dst")))
@@ -73,6 +74,13 @@ object KCore {
         "set would NOT be a k-core")
     live.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
       .select(col("src").as("node"), col("core_deg"))
+  }
+
+  /** Tracked checkpoint plus its row count, in the checkpoint's one
+    * materializing job ([[Checkpoints.trackedMeasured]]). */
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long, () => Unit) = {
+    val (out, r, release) = Checkpoints.trackedMeasured(df, count(lit(1)))
+    (out, r.getLong(0), release)
   }
 
   /** Rescan-vs-checkpoint break-even (the ChangelogInference

@@ -182,10 +182,12 @@ object Relevance {
     *   idf(t) = ln((N − df + 0.5)/(df + 0.5) + 1)
     *
     * Scale shape: zero explode, zero per-term shuffle — each term's tf is
-    * a pure projection (size(filter(words))), the corpus statistics
-    * (N, Σdl, df per term) come from ONE aggregate pass, broadcast back,
-    * and the final top-k is a TakeOrderedAndProject. Two scans total,
-    * independent of the number of query terms.
+    * a pure projection (size(filter(words))), and the corpus statistics
+    * (N, Σdl, df per term) are observed by the job that checkpoints the
+    * slim (id, dl, tf*) table, so they reach the driver without an
+    * aggregate exchange or a broadcast join. The scoring projection then
+    * reads the checkpoint once and the top-k is a TakeOrderedAndProject:
+    * two jobs total, independent of the number of query terms.
     */
   def bm25TopK(corpus: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], topK: Int,
@@ -193,35 +195,37 @@ object Relevance {
     require(terms.nonEmpty, "bm25 needs at least one term")
     // one native tokenization pass per row (functions.TermStats) instead
     // of n+1 interpreted regexp passes — see the expression's scaladoc;
-    // then checkpoint the SLIM (id, dl, tf*) table: both the corpus
-    // stats aggregate (a broadcast subquery, i.e. a separate job) and
-    // the scoring projection read it, so an unmaterialized plan would
-    // run the whole upstream DAG (cleaning/chunking/tokenizing) twice.
-    // The checkpoint is numbers-only — no text — so it is O(docs) cells.
+    // then checkpoint the SLIM (id, dl, tf*) table, measuring the corpus
+    // stats in the same job: the scoring projection reads the checkpoint,
+    // never the upstream DAG (cleaning/chunking/tokenizing). The
+    // checkpoint is numbers-only — no text — so it is O(docs) cells; it
+    // backs the lazy result, so it is left to the ContextCleaner.
     val ts = {
       import org.apache.spark.sql.graftbridge.ColumnBridge
       ColumnBridge.column(graft.functions.TermStats(
         ColumnBridge.expression(col(textCol)), terms))
     }
-    val withTf = corpus.select(col(idCol).as("__id"), ts.as("__ts"))
-      .select((col("__id") +: col("__ts.dl").as("dl") +:
-        terms.indices.map(i => col("__ts.tf")(i).as(s"tf$i"))): _*)
-      .localCheckpoint(true)
-    val stats = withTf.agg(
-      count(lit(1)).cast("double").as("N"),
-      (sum(col("dl")).as("sum_dl") +:
-        terms.indices.map(i =>
-          sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).cast("double")
-            .as(s"df$i"))): _*)
-    val scored = withTf.crossJoin(broadcast(stats))
-    val avgdl = col("sum_dl") / col("N")
+    val (withTf, stats, _) = Checkpoints.trackedMeasured(
+      corpus.select(col(idCol).as("__id"), ts.as("__ts"))
+        .select((col("__id") +: col("__ts.dl").as("dl") +:
+          terms.indices.map(i => col("__ts.tf")(i).as(s"tf$i"))): _*),
+      (count(lit(1)) +: sum(col("dl")) +:
+        terms.indices.map(i => sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)))): _*)
+    // the stats enter the projection as StableScalars: a new corpus
+    // changes only the codegen reference objects, not the source, so
+    // the scoring stage hits the compile cache. An empty corpus has
+    // null sums and no rows to score.
+    def stat(i: Int): Column = graft.functions.StableScalar.col(
+      if (stats.isNullAt(i)) 0.0 else stats.getAs[Number](i).doubleValue)
+    val n = stat(0)
+    val avgdl = stat(1) / n
     val score = terms.indices.map { i =>
-      val idf = q1024(log(
-        (col("N") - col(s"df$i") + 0.5) / (col(s"df$i") + 0.5) + 1.0))
+      val df = stat(2 + i)
+      val idf = q1024(log((n - df + 0.5) / (df + 0.5) + 1.0))
       idf * (col(s"tf$i") * (k1 + 1.0) /
         (col(s"tf$i") + lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl") / avgdl))))
     }.reduce(_ + _)
-    scored.select(col("__id").as(idCol), col("dl"), score.as("score"))
+    withTf.select(col("__id").as(idCol), col("dl"), score.as("score"))
       .filter(col("score") > 0.0)
       .orderBy(col("score").desc, col(idCol))
       .limit(topK)

@@ -340,18 +340,19 @@ object GraphQueries {
       (col("l_suppkey") * 2 + 1).as("dst"))
     val und = graft.operators.KCore.symmetrize(e0, "src", "dst")
       .localCheckpoint(true)
-    // degs is node-sized; checkpoint it so the three stat reads below
-    // (count, p60, min) cost three tiny scans instead of three full
-    // degree aggregations over the edge checkpoint — two whole edge
-    // passes removed at any scale.
-    val degs = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    val n = degs.count()
+    // degs is node-sized; checkpoint it so the p60 read below is a tiny
+    // scan instead of a second degree aggregation over the edge
+    // checkpoint. The node count and min degree ride the checkpoint's
+    // own job (Checkpoints.trackedMeasured).
+    val (degs, stats, release) = graft.operators.Checkpoints.trackedMeasured(
+      und.groupBy(col("src")).agg(count(lit(1)).as("deg")),
+      count(lit(1)), min(col("deg")))
+    val (n, minDeg) = (stats.getLong(0), stats.getLong(1))
     val idx = ((n - 1) * 6 / 10).toInt
     val p60 = degs.orderBy(col("deg"), col("src")).limit(idx + 1)
       .orderBy(col("deg").desc, col("src")).limit(1)
       .head().getLong(1)
-    val minDeg = degs.agg(min(col("deg"))).head().getLong(0)
+    release()
     (und, math.max(minDeg + 1, p60).toInt)
   }
 

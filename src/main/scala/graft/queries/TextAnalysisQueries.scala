@@ -354,8 +354,8 @@ object TextAnalysisQueries {
 
     // BM25 relevance ranking (Robertson & Spärck Jones, public): top-50
     // documents for a literal term set. Zero explode, zero per-term
-    // shuffle — tf is a pure projection, corpus stats come from one agg
-    // pass broadcast back, top-k is TakeOrderedAndProject. The oracle
+    // shuffle — tf is a pure projection, corpus stats are observed by the
+    // checkpoint job, top-k is TakeOrderedAndProject. The oracle
     // recomputes the identical expression tree (same literals, same
     // parenthesization, idf floor-quantized) in DuckDB.
     QueryDef("q_bm25", (s, dir) => {

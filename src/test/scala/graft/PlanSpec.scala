@@ -94,6 +94,13 @@ class PlanSpec extends SparkSpec {
     assert(plan("q_join_nonequi").contains("BroadcastNestedLoopJoin"))
   }
 
+  test("q_bm25 scores without a broadcast join: corpus stats are driver scalars") {
+    val p = plan("q_bm25")
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("BroadcastExchange"),
+      s"corpus stats must not be joined back into the scoring plan:\n$p")
+    assert(p.contains("TakeOrderedAndProject"), s"top-k:\n$p")
+  }
+
   test("q_join_semi and q_join_anti plan semi/anti joins") {
     assert(plan("q_join_semi").contains("LeftSemi"))
     assert(plan("q_join_anti").contains("LeftAnti"))

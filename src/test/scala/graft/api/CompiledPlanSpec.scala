@@ -13,7 +13,8 @@ class CompiledPlanSpec extends SparkSpec {
       CREATE TABLE cp_region (
         r_regionkey BIGINT, r_name STRING, r_comment STRING
       ) WITH ('connector' = 'filesystem',
-              'path' = '$sfDir/region.parquet', 'format' = 'parquet')""")
+              'path' = '$sfDir/region.parquet', 'format' = 'parquet',
+              'maxFilesPerTrigger' = '1')""")
     env.executeSql(s"""
       CREATE TABLE cp_sink (rk BIGINT, rn STRING)
       WITH ('connector' = 'filesystem',
@@ -37,6 +38,8 @@ class CompiledPlanSpec extends SparkSpec {
     val env2 = TableEnv(spark)
     assert(env2.tableSpec("cp_sink").isEmpty)
     env2.executeSql(s"EXECUTE PLAN '$tmp/plan.json'")
+    assert(env2.tableSpec("cp_region").get.options ==
+      Map("maxFilesPerTrigger" -> "1"), "reader options replay with the DDL")
     val got = spark.read.parquet(s"$tmp/sink")
     assert(got.count() == 3)
     assert(got.columns.toSeq == Seq("rk", "rn"))

@@ -573,6 +573,33 @@ class FlinkDdlSpec extends SparkSpec {
     assert(e.getMessage.contains("computed column"))
   }
 
+  test("WITH reader options reach streaming reads (maxFilesPerTrigger)") {
+    val env = TableEnv(spark)
+    val dir = java.nio.file.Files.createTempDirectory("ddl_opts").toString
+    import spark.implicits._
+    (0 until 3).foreach { i =>
+      Seq((i.toLong, i * 10L)).toDF("id", "v").coalesce(1)
+        .write.mode("append").parquet(s"$dir/t")
+    }
+    env.executeSql(s"""
+      CREATE TABLE opts_t (id BIGINT, v BIGINT)
+      WITH ('connector' = 'filesystem', 'path' = '$dir/t',
+            'format' = 'parquet', 'maxFilesPerTrigger' = '1')""")
+    assert(env.tableSpec("opts_t").get.options ==
+      Map("maxFilesPerTrigger" -> "1"))
+    assert(env.showCreateTable("opts_t").contains("'maxFilesPerTrigger' = '1'"))
+    val q = env.fromStreaming("opts_t").writeStream.format("memory")
+      .queryName("opts_t_q")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try {
+      q.awaitTermination()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 3,
+        "one staged file per micro-batch")
+      assert(spark.table("opts_t_q").count() == 3L)
+    } finally q.stop()
+  }
+
   test("CREATE FUNCTION binds registered names; DROP removes them") {
     val env = TableEnv(spark)
     // graft-registered function under a user alias

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{JobCount, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class RelevanceSpec extends SparkSpec {
@@ -82,5 +82,33 @@ class RelevanceSpec extends SparkSpec {
     val score = Relevance.bm25TopK(docs, "id", "text", Seq("rare", "common"), 10)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toMap
     assert(score(1L) > score(2L))
+  }
+
+  test("bm25: corpus stats ride the checkpoint job — two jobs, exact scores") {
+    val docs = Seq(
+      (1L, "rare word pad pad"),
+      (2L, "common word pad pad"),
+      (3L, "common word pad pad"),
+      (4L, "common word pad pad"),
+      (5L, "common word pad pad")).toDF("id", "text")
+    val (rows, jobs) = JobCount(spark)(
+      Relevance.bm25TopK(docs, "id", "text", Seq("rare", "common"), 10)
+        .collect())
+    assert(jobs == 2, s"checkpoint+stats and top-k: expected 2 jobs, saw $jobs")
+    // N = 5, avgdl = 4, df(rare) = 1, tf = 1, dl = avgdl: the tf factor
+    // is exactly 1, so doc 1 scores its quantized idf
+    val idf = math.floor(math.log((5.0 - 1.0 + 0.5) / (1.0 + 0.5) + 1.0) * 1024) /
+      1024.0
+    val k1 = 1.2
+    val b = 0.75
+    val expect = idf * (1.0 * (k1 + 1.0) /
+      (1.0 + k1 * ((1.0 - b) + b * (4.0 / (20.0 / 5.0)))))
+    assert(rows.find(_.getLong(0) == 1L).get.getDouble(2) == expect)
+  }
+
+  test("bm25: an empty corpus gives an empty top-k") {
+    val none = Seq.empty[(Long, String)].toDF("id", "text")
+    assert(Relevance.bm25TopK(none, "id", "text", Seq("spark"), 10)
+      .collect().isEmpty)
   }
 }

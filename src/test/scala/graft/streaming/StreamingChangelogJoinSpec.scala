@@ -59,15 +59,24 @@ class StreamingChangelogJoinSpec extends SparkSpec {
     val joined = StreamingChangelogJoin.join[String, P, P](
       lIn.toDS(), rIn.toDS(), _._1, _._1, jt)
     val name = s"scj_${jt}_$batchSize"
+    def feed(batch: Seq[((Int, String, Int, String), Int)]): Unit =
+      batch.foreach { case ((side, k, tag, kind), i) =>
+        if (side == 0) lIn.addData(((k, tag), kind, i.toLong))
+        else rIn.addData(((k, tag), kind, i.toLong))
+      }
+    val batches = events.zipWithIndex.grouped(batchSize).toSeq
+    // the first batch is staged before the query starts: a running query
+    // reads the two sources' offsets one after the other, so a trigger
+    // can fire between two addData calls and split a batch that was
+    // meant as one trigger into non-prefix pieces
+    feed(batches.head)
     val q = joined.toDF("kind", "l", "r").writeStream
       .format("memory").queryName(name)
       .outputMode(OutputMode.Append()).start()
     try {
-      events.zipWithIndex.grouped(batchSize).foreach { batch =>
-        batch.foreach { case ((side, k, tag, kind), i) =>
-          if (side == 0) lIn.addData(((k, tag), kind, i.toLong))
-          else rIn.addData(((k, tag), kind, i.toLong))
-        }
+      q.processAllAvailable()
+      batches.tail.foreach { batch =>
+        feed(batch)
         q.processAllAvailable()
       }
       spark.table(name)
