@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions.col
   * ON l.<key> = r.<key>
   * [WHERE <pred>]
   * }}}
-  * Plans the existing AsOfJoinExec (co-partitioned single-pass merge,
-  * graft.plans.AsOfJoinPlan) — NOT a union/window rewrite. The right
+  * Plans the as-of join operator ([[graft.operators.AsOfJoin.backward]]:
+  * co-partitioned single-pass merge, graft.plans.AsOfJoinExec). The
+  * versioned table must be unique per (key, version time). The right
   * side's version-time column is the table's declared watermark column
   * when registered via TableEnv.createTable, else the column named like
   * the left time attribute.
@@ -79,7 +80,7 @@ object TemporalJoinSql {
     val rightKey2 = renames.getOrElse(rightKey, rightKey)
     val rightTs2 = renames.getOrElse(rightTs0, rightTs0)
 
-    val joined0 = graft.plans.PlannedAsOfJoin.asOf(left, right,
+    val joined0 = graft.operators.AsOfJoin.backward(left, right,
       leftKey, rightKey2, leftTs, rightTs2, right.columns.toSeq)
     // inner temporal join drops left rows with no prior version; the
     // (non-null) right key doubles as the match marker

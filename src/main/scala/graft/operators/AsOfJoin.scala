@@ -1,24 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
+import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy}
 
 /** Batch as-of (temporal) join — reference: temporal/versioned-table join
   * `FOR SYSTEM_TIME AS OF` (flink-table-runtime/.../operators/join/temporal/
   * TemporalRowTimeJoinOperator.java:78).
   *
   * For each left row, attach the latest right row whose timestamp is <=
-  * the left row's timestamp, per key ("backward" as-of).
+  * the left row's timestamp, per key ("backward", inclusive), or nulls.
+  * Null keys and timestamps never match (SQL semantics).
   *
-  * Implementation is the union-sort trick, NOT a range join: tag both
-  * sides, union them, and per key take `last(right_value, ignoreNulls)`
-  * over rows ordered by (ts, tag) with right rows sorting before left
-  * rows at equal ts (inclusive match). Cost: ONE shuffle on the key and
-  * one sort — linear in |L|+|R|, no quadratic key-range explosion, no
-  * broadcast requirement. This is the plan that survives 100 TB: an
-  * equi-range join would re-pair every left row with every earlier right
-  * row before picking the max.
+  * Plans [[graft.plans.AsOfJoinPlan]]: both sides hash-distributed on the
+  * key and sorted by (key, ts), then one linear merge pass per partition
+  * (graft.plans.AsOfJoinExec). Timestamps may be of any orderable type.
   *
   * The right side must be unique per (key, ts); pre-aggregate if not.
   */
@@ -31,49 +30,39 @@ object AsOfJoin {
     * @param rightVals  right columns to carry onto left rows
     */
   def backward(left: DataFrame, right: DataFrame, key: String, ts: String,
-      rightVals: Seq[String]): DataFrame = {
-    val leftCols = left.columns.toSeq
-    // Null join keys/timestamps never match (SQL semantics; also the
-    // custom AsOfJoinExec's behavior): a null-key right row must not
-    // fill the null-key window partition's left rows.
-    val rightValid = right.filter(col(key).isNotNull && col(ts).isNotNull)
-    // Align schemas: left rows carry null right-values, right rows carry
-    // null left-values. tag 0 = right (sorts first at equal ts → inclusive).
-    val taggedRight = rightValid.select(
-      col(key) +: col(ts) +: lit(0).as("__tag") +:
-        (rightVals.map(col) ++
-          leftCols.filterNot(c => c == key || c == ts)
-            .map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
-    val taggedLeft = left.select(
-      col(key) +: col(ts) +: lit(1).as("__tag") +:
-        (rightVals.map(c => lit(null).cast(right.schema(c).dataType).as(c)) ++
-          leftCols.filterNot(c => c == key || c == ts).map(col)): _*)
+      rightVals: Seq[String]): DataFrame =
+    backward(left, right, key, key, ts, ts, rightVals)
 
-    val w = Window.partitionBy(col(key)).orderBy(col(ts), col("__tag"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val filled = taggedRight.unionByName(taggedLeft)
-      .select((col(key) +: col(ts) +: col("__tag") +:
-        (rightVals.map(c => last(col(c), ignoreNulls = true).over(w).as(c)) ++
-          leftCols.filterNot(c => c == key || c == ts).map(col))): _*)
-    filled.filter(col("__tag") === 1).drop("__tag")
-      .select(leftCols.map(col) ++ rightVals.map(col): _*)
-  }
-
-  /** General-purpose variant with an explicit pick: latest right row per
-    * (left row) via join + row_number. O(matches) — fine when the range
-    * is bounded (tolerance), used by the interval-bounded as-of. */
-  def backwardWithTolerance(left: DataFrame, right: DataFrame, key: String,
-      ts: String, toleranceExpr: Column, leftId: String,
+  /** General form with distinct column names per side (the SQL
+    * `FOR SYSTEM_TIME AS OF` surface needs this). Registers the strategy
+    * on the session (idempotent). */
+  def backward(left: DataFrame, right: DataFrame,
+      leftKey: String, rightKey: String, leftTs: String, rightTs: String,
       rightVals: Seq[String]): DataFrame = {
-    val r = right.select(
-      (col(key).as("__rk") +: col(ts).as("__rts") +: rightVals.map(col)): _*)
-    val joined = left.join(r,
-      col(key) === col("__rk") && col("__rts") <= col(ts) &&
-        col("__rts") >= col(ts) - toleranceExpr, "left")
-    val w = Window.partitionBy(col(leftId))
-      .orderBy(col("__rts").desc_nulls_last)
-    joined.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__rk", "__rts")
+    val spark: SparkSession = left.sparkSession
+    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    val lPlan = ColumnBridge.analyzedPlan(left)
+    // re-alias the right side so its attribute ids can never collide
+    // with the left's (both sides often derive from the same base
+    // DataFrame; ambiguous ids would let the optimizer collapse the
+    // right key/ts onto the left's and mis-prune the right child)
+    val rPlanRaw = ColumnBridge.analyzedPlan(right)
+    val rPlan: LogicalPlan =
+      Project(rPlanRaw.output.map(a => Alias(a, a.name)()), rPlanRaw)
+    def attr(p: LogicalPlan, n: String): Attribute =
+      p.output.find(_.name == n).getOrElse(
+        throw new IllegalArgumentException(s"no column $n"))
+    val (lk, rk) = (attr(lPlan, leftKey), attr(rPlan, rightKey))
+    val (lts, rts) = (attr(lPlan, leftTs), attr(rPlan, rightTs))
+    // the merge compares both sides with one ordering per column pair
+    Seq(lk -> rk, lts -> rts).foreach { case (l, r) =>
+      require(l.dataType == r.dataType, s"as-of join: ${l.name} is " +
+        s"${l.dataType.simpleString} but ${r.name} is ${r.dataType.simpleString}")
+    }
+    val plan = AsOfJoinPlan(lPlan, rPlan, lk, rk, lts, rts,
+      rightVals.map(attr(rPlan, _)))
+    ColumnBridge.ofRows(spark, plan)
   }
 }

@@ -34,57 +34,6 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   */
 object SetSimJoin {
 
-  /** Auto-switch point for the vocabulary factorization: above this
-    * many distinct tokens the per-bucket distributed rank replaces the
-    * single-task global sort (measured crossover region; the exact
-    * value only matters within ~2×). */
-  val DistributedVocabThreshold: Long = 1000000L
-
-  // ---- oversized-vocab visibility on the lazy sort path ----
-  // The default factorization is the lazy single-task sort (no job at
-  // construction), so a vocabulary past the distributed crossover is a
-  // silent bottleneck. An `observe` metric rides the query's own
-  // execution (zero extra jobs, plan unchanged below the window) and a
-  // one-time QueryExecutionListener logs the regression when it fires.
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  private val obsCounter = new java.util.concurrent.atomic.AtomicLong(0)
-  private val listenerSessions = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-        java.lang.Boolean]()))
-  private[operators] val warnedVocab =
-    new java.util.concurrent.atomic.AtomicLong(-1L) // test observability
-
-  private def observeVocab(dfreq: DataFrame): DataFrame = {
-    val spark = dfreq.sparkSession
-    if (listenerSessions.add(spark)) {
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit =
-            qe.observedMetrics.foreach { case (name, row) =>
-              if (name.startsWith("graft_setsim_vocab_") && !row.isNullAt(0)) {
-                val n = row.getLong(0)
-                if (n > DistributedVocabThreshold) {
-                  warnedVocab.set(n)
-                  log.warn(
-                    s"SetSimJoin: vocabulary of $n distinct tokens exceeds " +
-                      s"the single-task sort crossover ($DistributedVocabThreshold); " +
-                      "set spark.graft.setSimJoin.vocab=distributed (or pass " +
-                      "distributedVocab=Some(true)) to avoid the sort bottleneck")
-                }
-              }
-            }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = ()
-        })
-    }
-    dfreq.observe(s"graft_setsim_vocab_${obsCounter.incrementAndGet()}",
-      count(lit(1)).as("n"))
-  }
-
   /** All unordered pairs of `docs` ids whose token sets have
     * Jaccard >= tau. `tokensCol` is an array column (dedup'd
     * internally). Returns (id_a, id_b, inter, union_n, jaccard),
@@ -104,8 +53,7 @@ object SetSimJoin {
     * which only steers the prefix ordering heuristic, never the exact
     * result set (verification recounts every intersection). */
   def jaccardJoinTokens(tok0: DataFrame, idCol: String, tokenCol: String,
-      tau: Double, maxBucket: Int = 10000,
-      distributedVocab: Option[Boolean] = None): DataFrame = {
+      tau: Double, maxBucket: Int = 10000): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau must be in (0,1], got $tau")
     require(maxBucket > 1, s"maxBucket must be > 1, got $maxBucket")
     // No explicit persist on the shared tables (measured, r14): the
@@ -129,74 +77,21 @@ object SetSimJoin {
       .select(col(idCol).as("id"), col(tokenCol).as("token"))
       .filter(col("id").isNotNull)
       .distinct()
-    val dfreq0 = tok.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    // Factorization selection. The plan shape depends on the
-    // vocabulary size, which only a job can measure — so by DEFAULT
-    // construction stays lazy (EXPLAIN/audit flows run no job) and the
-    // single-task sort is used; the measured auto-switch is opt-in via
-    // conf `spark.graft.setSimJoin.vocab`:
-    //  - "sort" (default): global row_number; correct at any size,
-    //    single-task vocabulary sort — fine up to ~10^6 tokens.
-    //  - "distributed": per-bucket rank; pay ~2 extra shuffles, scale
-    //    past one task's sort budget. Set this for web-scale shingle
-    //    spaces.
-    //  - "probe": restore the eager auto-switch — ONE job (checkpoint
-    //    + count of the token-frequency table) at construction picks
-    //    the path; the checkpoint is then shared with the rank scan.
-    // Callers that know their vocabulary pass Some(...) and skip all
-    // of this.
-    val (dfreq, useDistributed) = distributedVocab match {
-      case Some(dv) => (dfreq0, dv)
-      case None =>
-        tok0.sparkSession.conf
-          .getOption("spark.graft.setSimJoin.vocab").getOrElse("sort") match {
-          case "sort" => (dfreq0, false)
-          case "distributed" => (dfreq0, true)
-          case "probe" =>
-            val d = dfreq0.localCheckpoint(true)
-            (d, d.count() > DistributedVocabThreshold)
-          case other => throw new IllegalArgumentException(
-            s"spark.graft.setSimJoin.vocab must be sort|distributed|probe, got '$other'")
-        }
-    }
+    val dfreq = tok.groupBy(col("token")).agg(count(lit(1)).as("df"))
     // factorize tokens to dense int ids ordered by (string): bijective,
     // so every downstream set op is EXACT, while candidate buckets and
     // verification arrays carry 4-byte ints instead of shingle strings.
     // Ordering by (df, tid) == (df, token) because tid is
     // token-ascending, so the prefix order is unchanged.
     //
-    // Two physically different, value-identical factorizations
-    // (auto-selected on vocabulary size unless the caller forces one):
-    //  - small vocab: one global row_number window. The vocabulary sort
-    //    runs on a single task — MEASURED faster up to ~10^6 tokens
-    //    (at sf0.1's 27k-shingle vocab the sort is 0.5s; the
-    //    distributed variant's two extra shuffles + broadcast cost
-    //    ~1.7s more end-to-end).
-    //  - distributed: per-bucket rank + cumulative bucket offsets
-    //    (bucket = first token char, a PREFIX of the sort key, so
-    //    concatenating bucket-local ranks in bucket order IS the global
-    //    token order); only the alphabet-sized offset table touches a
-    //    single task. Flip this on when the vocabulary itself is beyond
-    //    one executor's sort budget (web-scale shingle spaces); widen
-    //    the bucket to 2-3 chars if one leading char still skews.
-    val vocab =
-      if (!useDistributed)
-        observeVocab(dfreq).withColumn("tid",
-          row_number().over(Window.orderBy(col("token"))))
-      else {
-        val bucketed = dfreq.withColumn("b", substring(col("token"), 1, 1))
-        val offsets = bucketed.groupBy(col("b")).agg(count(lit(1)).as("bn"))
-          .withColumn("off", coalesce(
-            sum(col("bn")).over(Window.orderBy(col("b"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("b"), col("off"))
-        bucketed
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("b")).orderBy(col("token"))))
-          .join(broadcast(offsets), "b")
-          .withColumn("tid", (col("off") + col("rn")).cast("int"))
-          .select(col("token"), col("df"), col("tid"))
-      }
+    // One global row_number window: the vocabulary sort runs on a
+    // single task and construction stays lazy (EXPLAIN/audit flows run
+    // no job). Measured against a per-bucket distributed rank with
+    // broadcast bucket offsets (two more shuffles): at sf0.1's
+    // 27k-shingle vocabulary the single-task sort wins end to end
+    // (q_set_simjoin medians 4.4 s vs 5.2 s).
+    val vocab = dfreq.withColumn("tid",
+      row_number().over(Window.orderBy(col("token"))))
     val tokI = tok.join(vocab, "token").select(col("id"), col("tid"), col("df"))
     // set size and prefix rank from ONE pass over the same id-keyed
     // window: count(*) over the partition IS the old `sz` table, so the

@@ -1,30 +1,33 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** As-of join as a first-class physical operator — the layer-(c) path
-  * from SURVEY.md §7.1: custom LogicalPlan + SparkStrategy + SparkPlan.
-  * Reference: TemporalRowTimeJoinOperator.java:78 (event-time temporal
-  * join) and BatchExecSortMergeJoin's merge machinery.
+/** The as-of join operator — the layer-(c) path from SURVEY.md §7.1:
+  * custom LogicalPlan + SparkStrategy + SparkPlan, built by
+  * [[graft.operators.AsOfJoin.backward]]. Reference:
+  * TemporalRowTimeJoinOperator.java:78 (event-time temporal join) and
+  * BatchExecSortMergeJoin's merge machinery.
   *
   * Semantics: for each left row, attach the single latest right row with
   * the same key and right.ts <= left.ts (backward, inclusive), or nulls.
+  * The right side must be unique per (key, ts); pre-aggregate if not.
   *
   * Execution: both children are hash-distributed on the key and sorted
   * by (key, ts) — Catalyst's EnsureRequirements inserts the exchanges /
   * sorts — then one streaming merge pass per partition keeps O(1) state
-  * (the current candidate). Versus the union+window formulation this
-  * avoids row widening, null-padding and the window buffer; versus a
-  * range join it never materializes the per-key cross product. At 100 TB
-  * it is one co-partitioned shuffle per side and a linear merge.
+  * (the current candidate). Keys and timestamps are compared with
+  * generated orderings of their Catalyst types, the same orderings the
+  * sorts use, so any orderable type merges correctly. Versus a union +
+  * window formulation this avoids row widening, null-padding and the
+  * window buffer; versus a range join (Spark's `RewriteAsOfJoin`) it
+  * never materializes the per-key cross product. At 100 TB it is one
+  * co-partitioned shuffle per side and a linear merge.
   */
 case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
     leftKey: Attribute, rightKey: Attribute,
@@ -80,16 +83,18 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
       val lTsProj = UnsafeProjection.create(Seq(lts), lOut)
       val rTsProj = UnsafeProjection.create(Seq(rts), rOut)
       val rValProj = UnsafeProjection.create(rv, rOut)
-      val keyOrdering = RowOrdering.create(
-        Seq(SortOrder(BoundReference(0, lk.dataType, lk.nullable),
-          Ascending)), Seq.empty)
+      def ordering(a: Attribute) = RowOrdering.create(
+        Seq(SortOrder(BoundReference(0, a.dataType, a.nullable), Ascending)),
+        Seq.empty)
+      val keyOrdering = ordering(lk)
+      val tsOrdering = ordering(lts)
       val nullRightRow = new GenericInternalRow(rv.length)
       new Iterator[InternalRow] {
         private val joined = new JoinedRow
         private val outProj = UnsafeProjection.create(out, out)
         private var rRow: InternalRow = _        // lookahead right row
         private var rKey: UnsafeRow = _
-        private var rTs: Long = _
+        private var rTs: UnsafeRow = _  // rTsProj's buffer: valid until the next advance
         private var rValid = false
         private var candVals: UnsafeRow = _      // latest right <= ts, projected
         private var candKey: UnsafeRow = _
@@ -106,7 +111,7 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
             val t = rTsProj(rRow)
             if (!k.anyNull && !t.anyNull) {
               rKey = k.copy()
-              rTs = t.getLong(0)
+              rTs = t
               rValid = true
             }
           }
@@ -121,7 +126,6 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
           if (lKey.anyNull || lTsRow.anyNull) {
             return outProj(joined(lRow, nullRightRow))
           }
-          val lTsV = lTsRow.getLong(0)
           // drop candidate from a previous key
           if (candKey != null && keyOrdering.compare(candKey, lKey) != 0) {
             candKey = null; candVals = null
@@ -131,7 +135,7 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
           while (cont) {
             val c = keyOrdering.compare(rKey, lKey)
             if (c < 0) advanceRight()
-            else if (c == 0 && rTs <= lTsV) {
+            else if (c == 0 && tsOrdering.compare(rTs, lTsRow) <= 0) {
               candKey = rKey
               candVals = rValProj(rRow).copy()
               advanceRight()
@@ -150,42 +154,4 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
 
   override protected def withNewChildrenInternal(
       l: SparkPlan, r: SparkPlan): SparkPlan = copy(left = l, right = r)
-}
-
-/** User-facing API for the planned as-of join. */
-object PlannedAsOfJoin {
-
-  /** Backward (inclusive) as-of join on a shared key/timestamp column
-    * name; `rightVals` are carried from the right side. */
-  def asOf(leftDf: DataFrame, rightDf: DataFrame, key: String, ts: String,
-      rightVals: Seq[String]): DataFrame =
-    asOf(leftDf, rightDf, key, key, ts, ts, rightVals)
-
-  /** General form with distinct column names per side (the SQL
-    * `FOR SYSTEM_TIME AS OF` surface needs this). Registers the strategy
-    * on the session (idempotent). */
-  def asOf(leftDf: DataFrame, rightDf: DataFrame,
-      leftKey: String, rightKey: String, leftTs: String, rightTs: String,
-      rightVals: Seq[String]): DataFrame = {
-    val spark: SparkSession = leftDf.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    val lPlan = ColumnBridge.analyzedPlan(leftDf)
-    // re-alias the right side so its attribute ids can never collide
-    // with the left's (both sides often derive from the same base
-    // DataFrame; ambiguous ids would let the optimizer collapse the
-    // right key/ts onto the left's and mis-prune the right child)
-    val rPlanRaw = ColumnBridge.analyzedPlan(rightDf)
-    val rPlan: LogicalPlan = org.apache.spark.sql.catalyst.plans.logical.Project(
-      rPlanRaw.output.map(a => Alias(a, a.name)()), rPlanRaw)
-    def attr(p: LogicalPlan, n: String): Attribute =
-      p.output.find(_.name == n).getOrElse(
-        throw new IllegalArgumentException(s"no column $n"))
-    val plan = AsOfJoinPlan(lPlan, rPlan,
-      attr(lPlan, leftKey), attr(rPlan, rightKey),
-      attr(lPlan, leftTs), attr(rPlan, rightTs),
-      rightVals.map(attr(rPlan, _)))
-    ColumnBridge.ofRows(spark, plan)
-  }
 }

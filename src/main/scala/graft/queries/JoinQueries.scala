@@ -139,9 +139,11 @@ object JoinQueries {
       JOIN region ON n_regionkey = r_regionkey
       GROUP BY r_name, n_name""")),
 
-    // As-of join: each purchase gets the latest prior click per user.
-    // Reference: TemporalRowTimeJoinOperator.java:78; DuckDB oracle uses
-    // its native ASOF JOIN.
+    // As-of join: each purchase gets the latest prior click per user,
+    // both sides derived from ONE events frame (the as-of operator
+    // re-aliases the right side). Reference:
+    // TemporalRowTimeJoinOperator.java:78; DuckDB oracle uses its
+    // native ASOF JOIN.
     QueryDef("q_asof_join", (s, dir) => {
       val e = t(s, dir, "events")
       val purchases = e.filter(col("event_type") === "purchase")
@@ -160,7 +162,7 @@ object JoinQueries {
                       GROUP BY user_id, ts) c
         ON e.user_id = c.user_id AND e.ts >= c.ts""")),
 
-    // Same as-of semantics through the custom physical operator
+    // The same as-of join over two separately loaded events frames
     // (graft.plans.AsOfJoinExec: LogicalPlan + SparkStrategy + SparkPlan,
     // co-partitioned single-pass merge).
     QueryDef("q_asof_join_planned", (s, dir) => {
@@ -171,8 +173,8 @@ object JoinQueries {
       val clicks = e2.filter(col("event_type") === "click")
         .groupBy(col("user_id"), col("ts"))
         .agg(max(col("value")).as("click_value"))
-      graft.plans.PlannedAsOfJoin.asOf(purchases, clicks,
-        "user_id", "ts", Seq("click_value"))
+      AsOfJoin.backward(purchases, clicks, "user_id", "ts",
+        Seq("click_value"))
     }, Some("""
       SELECT e.event_id, e.user_id, e.ts, e.value, c.click_value
       FROM (SELECT event_id, user_id, ts, value FROM events

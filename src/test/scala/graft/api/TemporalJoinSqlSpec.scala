@@ -26,7 +26,7 @@ class TemporalJoinSqlSpec extends SparkSpec {
       LEFT JOIN tj_clicks FOR SYSTEM_TIME AS OF p.ts AS c
       ON p.user_id = c.user_id""")
     assert(sqlOut.queryExecution.executedPlan.toString.contains("AsOfJoin"))
-    val api = graft.plans.PlannedAsOfJoin.asOf(
+    val api = graft.operators.AsOfJoin.backward(
       spark.table("tj_purchases"), spark.table("tj_clicks"),
       "user_id", "ts", Seq("click_value"))
       .select(col("event_id"), col("user_id"), col("click_value"))

@@ -89,24 +89,6 @@ class AnalyticsOpsSpec extends SparkSpec {
     want.foreach { case (k, j) => assert(math.abs(got(k) - j) < 1e-12) }
   }
 
-  test("distributedVocab factorization yields identical join results") {
-    val rnd = new Random(12)
-    // multi-char tokens across many leading chars so bucketed ranks +
-    // offsets genuinely differ from a trivial single-bucket case
-    val vocab = (for (a <- 'a' to 'z'; b <- 'a' to 'd') yield s"$a$b").toIndexedSeq
-    val docs = (0 until 40).map { i =>
-      (i.toLong, Seq.fill(6 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size))).distinct)
-    }
-    val tok = docs.toDF("id", "toks")
-      .select(col("id"), explode(col("toks")).as("token"))
-    def rows(dv: Boolean) =
-      SetSimJoin.jaccardJoinTokens(tok, "id", "token", 0.5,
-        distributedVocab = Some(dv))
-        .orderBy(col("id_a"), col("id_b"))
-        .collect().map(_.toSeq).toSeq
-    assert(rows(dv = false) == rows(dv = true))
-  }
-
   test("jaccardJoinTokens construction + explain run no Spark job by default") {
     val tok = Seq((1L, "aa"), (1L, "bb"), (2L, "aa"), (2L, "bb"))
       .toDF("id", "token")
@@ -117,45 +99,12 @@ class AnalyticsOpsSpec extends SparkSpec {
         jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
-    // listener delivery is async — poll with a bound instead of the
-    // private[spark] listenerBus.waitUntilEmpty
-    def await(cond: => Boolean): Boolean = {
-      val deadline = System.nanoTime() + 5000000000L
-      while (!cond && System.nanoTime() < deadline) Thread.sleep(50)
-      cond
-    }
     try {
       val joined = SetSimJoin.jaccardJoinTokens(tok, "id", "token", 0.5)
       joined.queryExecution.executedPlan // force full planning, as EXPLAIN does
       Thread.sleep(500) // grace for any stray async job-start event
       assert(jobs.get() == 0,
-        s"default (conf-less) construction must stay lazy, saw ${jobs.get()} jobs")
-      // the opt-in probe DOES run its measurement job
-      spark.conf.set("spark.graft.setSimJoin.vocab", "probe")
-      try {
-        SetSimJoin.jaccardJoinTokens(tok, "id", "token", 0.5)
-        assert(await(jobs.get() > 0), "probe mode should run the vocab-count job")
-      } finally spark.conf.unset("spark.graft.setSimJoin.vocab")
+        s"construction must stay lazy, saw ${jobs.get()} jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  test("vocab conf modes agree with each other") {
-    val rnd = new Random(7)
-    val vocab = (for (a <- 'a' to 'j'; b <- 'a' to 'c') yield s"$a$b").toIndexedSeq
-    val docs = (0 until 25).map { i =>
-      (i.toLong, Seq.fill(5 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size))).distinct)
-    }
-    val tok = docs.toDF("id", "toks")
-      .select(col("id"), explode(col("toks")).as("token"))
-    def rows(mode: String) = {
-      spark.conf.set("spark.graft.setSimJoin.vocab", mode)
-      try SetSimJoin.jaccardJoinTokens(tok, "id", "token", 0.5)
-        .orderBy(col("id_a"), col("id_b")).collect().map(_.toSeq).toSeq
-      finally spark.conf.unset("spark.graft.setSimJoin.vocab")
-    }
-    val sorted = rows("sort")
-    assert(rows("distributed") == sorted)
-    assert(rows("probe") == sorted)
-    intercept[IllegalArgumentException](rows("bogus"))
   }
 }

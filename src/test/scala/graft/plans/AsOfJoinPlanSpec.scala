@@ -16,17 +16,24 @@ class AsOfJoinPlanSpec extends SparkSpec {
     .agg(max(col("value")).as("click_value"))
 
   test("planned as-of join matches the union-sort formulation") {
-    val planned = PlannedAsOfJoin.asOf(purchases, clicks,
+    val planned = AsOfJoin.backward(purchases, clicks,
       "user_id", "ts", Seq("click_value"))
-    val reference = AsOfJoin.backward(purchases, clicks,
-      "user_id", "ts", Seq("click_value"))
+    // reference: a plain left range join on the key with r.ts <= l.ts,
+    // then the click_value of the largest r.ts per left row (clicks are
+    // unique per (user_id, ts))
+    val p = purchases.as("l")
+    val reference = p
+      .join(clicks.as("r"), col("l.user_id") === col("r.user_id") &&
+        col("r.ts") <= col("l.ts"), "left")
+      .groupBy(p.columns.map(c => col(s"l.$c")): _*)
+      .agg(max_by(col("r.click_value"), col("r.ts")).as("click_value"))
     assert(planned.count() == purchases.count())
     assert(planned.exceptAll(reference).isEmpty &&
       reference.exceptAll(planned).isEmpty)
   }
 
   test("physical plan is AsOfJoinExec with exchanges and sorts") {
-    val planned = PlannedAsOfJoin.asOf(purchases, clicks,
+    val planned = AsOfJoin.backward(purchases, clicks,
       "user_id", "ts", Seq("click_value"))
     val p = planned.queryExecution.executedPlan.toString
     assert(p.contains("AsOfJoin ")) // nodeName (Spark strips "Exec")
@@ -45,10 +52,18 @@ class AsOfJoinPlanSpec extends SparkSpec {
       .withColumn("ts", org.apache.spark.sql.functions
         .timestamp_millis(col("rid") * 2000))
       .select(col("k"), col("ts"), col("rv"))
-    val out = PlannedAsOfJoin.asOf(l, r, "k", "ts", Seq("rv"))
+    val out = AsOfJoin.backward(l, r, "k", "ts", Seq("rv"))
       .collect().map(row => row.getAs[Long]("k") -> Option(row.get(4)))
       .toMap
     assert(out(100L) == None)      // right ts 2000 > left ts 1000
     assert(out(300L) == None)      // no right rows for key 300
+  }
+
+  test("rejects key or timestamp columns of different types") {
+    import spark.implicits._
+    val l = Seq((1L, 10L)).toDF("k", "ts")
+    val r = Seq((1L, 10, 2.0)).toDF("k", "ts", "rv") // int ts vs bigint
+    intercept[IllegalArgumentException](
+      AsOfJoin.backward(l, r, "k", "ts", Seq("rv")))
   }
 }
