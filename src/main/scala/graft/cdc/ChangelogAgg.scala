@@ -255,7 +255,7 @@ object ChangelogAgg {
           var (cnt, sum, multiset) =
             state.getOption.getOrElse((0L, 0.0, Map.empty[Double, Long]))
           rows.foreach { case (_, v, kind) =>
-            val w = if (kind == "+I" || kind == "+U") 1L else -1L
+            val w = weightOf(kind)
             cnt += w
             sum += w * v
             val m = multiset.getOrElse(v, 0L) + w

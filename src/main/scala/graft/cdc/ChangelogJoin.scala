@@ -21,21 +21,9 @@ import org.apache.spark.sql.functions._
   * sequence value the left change is applied first. Within one side the
   * sequence must be unique per event (it is the event's identity).
   *
-  * Emissions per event, exactly the reference's operator logic:
-  *
-  *  - an event `e` on one side emits one joined row per LIVE matching
-  *    row of the other side's state at its arrival time (live = net
-  *    weight of that row content > 0, a row appearing k times emits k
-  *    rows), carrying `e`'s own row kind;
-  *  - outer variants (left/right/full) null-pad: an event with NO live
-  *    match on the padded side emits (row, nulls) with its own kind;
-  *    and an event on the OTHER side whose key's association count
-  *    crosses zero (0→n on an insert, n→0 on the last retraction)
-  *    emits the padding transition for every live padded-side row:
-  *    `-U`(row, nulls) when the first association appears, `+U`(row,
-  *    nulls) when the last disappears. The association count per key is
-  *    the batch replay of OuterJoinRecordStateView's per-record
-  *    `numOfAssociations`.
+  * Emissions per event follow [[ChangelogJoinKernel]], the single
+  * statement of the per-change rule (joined rows, null padding, and
+  * padding transitions when a key's association count crosses zero).
   *
   * DELIBERATE kind deviation: padding transitions emit -U/+U and
   * outer-side emissions forward the input's +U/-U, whereas the
@@ -87,7 +75,7 @@ object ChangelogJoin {
 
   private def prep(left: DataFrame, right: DataFrame, joinType: String,
       leftSeq: Seq[String], rightSeq: Seq[String]): Prep = {
-    require(Set("inner", "left", "right", "full")(joinType),
+    require(ChangelogJoinKernel.JoinTypes(joinType),
       s"unsupported join type: $joinType")
     val n = leftSeq.length
     require(n > 0 && rightSeq.length == n,
@@ -104,6 +92,10 @@ object ChangelogJoin {
           .as("__t"))): _*)
     Prep(n, lp, rp, events(left, lp, leftSeq), events(right, rp, rightSeq))
   }
+
+  /** Typed null columns standing in for `src`'s payload `pay`. */
+  private def nullPay(src: DataFrame, pay: Seq[String]): Seq[Column] =
+    pay.map(c => lit(null).cast(src.schema(c).dataType).as(c))
 
   /** Shared finisher: deterministic per-event emission index over the
     * pre-emission frame (lp ++ rp ++ __kind ++ __t ++ __side ++ __ctag
@@ -131,9 +123,6 @@ object ChangelogJoin {
       leftKey: String, rightKey: String, joinType: String,
       leftSeq: Seq[String], rightSeq: Seq[String]): DataFrame = {
     val Prep(n, lp, rp, le, re) = prep(left, right, joinType, leftSeq, rightSeq)
-
-    def nullPay(src: DataFrame, pay: Seq[String]): Seq[Column] =
-      pay.map(c => lit(null).cast(src.schema(c).dataType).as(c))
 
     // ---- match emissions: events of `e` probing `s`'s state ----
     // state of `s` as of event time: s-events strictly before (or at,
@@ -233,16 +222,18 @@ object ChangelogJoin {
     * formulation's join intermediate is O(E·S) per key in the sides'
     * change counts, this one shuffles each change ONCE to its key's
     * partition, sorts within partitions (Spark's spill-safe sort — no
-    * per-group in-memory buffering of the input), and runs the
-    * reference operator's state machine per key: every change probes
-    * the live multiset of the other side and emits, exactly
-    * StreamingJoinOperator.java:37 processElement — O(changes +
-    * emissions) work, memory bounded by the LIVE state per key (the
-    * JoinRecordStateView shape, dead contents dropped), parallelism =
-    * distinct keys, as in the reference's keyed state. Use this for
-    * churn-heavy keys (entities updated thousands of times); the
-    * relational form stays preferable at low churn where Catalyst's
-    * codegen'd joins beat a row-at-a-time state machine.
+    * per-group in-memory buffering of the input), and runs
+    * [[ChangelogJoinKernel]] per key — the single statement of the
+    * emission rule, shared with the streaming operator: every change
+    * probes the live multiset of the other side and emits, exactly
+    * StreamingJoinOperator.java:37 processElement. A change under a
+    * null join key never matches and never associates: it only pads.
+    * O(changes + emissions) work, memory bounded by the LIVE state per
+    * key (the JoinRecordStateView shape, dead contents dropped),
+    * parallelism = distinct keys, as in the reference's keyed state.
+    * Use this for churn-heavy keys (entities updated thousands of
+    * times); the relational form stays preferable at low churn where
+    * Catalyst's codegen'd joins beat a row-at-a-time state machine.
     *
     * One semantic requirement beyond [[updateStream]]: payload
     * equality is decided in Scala (multiset membership), so payload
@@ -262,11 +253,6 @@ object ChangelogJoin {
         s"replay formulation cannot compare MAP-typed payload '$c' — " +
           "use updateStream")
     }
-    val padsLeft = joinType == "left" || joinType == "full"
-    val padsRight = joinType == "right" || joinType == "full"
-
-    def nullPay(src: DataFrame, pay: Seq[String]): Seq[Column] =
-      pay.map(c => lit(null).cast(src.schema(c).dataType).as(c))
     // unified event stream: grouping key + side + kind + time + both
     // payloads (the absent side null)
     val lU = le.select((Seq(col(leftKey).as("__gk"), lit(0).as("__side"),
@@ -282,85 +268,43 @@ object ChangelogJoin {
         StructField("__side", IntegerType, nullable = false),
         StructField("__ctag", IntegerType, nullable = false),
         StructField("__dup", LongType, nullable = false)))
-    val lpN = lp.length; val rpN = rp.length
-    val lpOff = 4; val rpOff = 4 + lpN
+    val rpOff = 4 + lp.length; val rpEnd = rpOff + rp.length
     // one shuffle on the join key, spill-safe sort in (key, t, side)
     // order — left wins seq ties, exactly the relational form's
     // inclusive/strict probe asymmetry
     val sorted = uni.repartition(col("__gk"))
       .sortWithinPartitions(col("__gk"), col("__t"), col("__side"))
     sorted.mapPartitions { it =>
-      // multiset key: Array payload fields wrapped for value equality
-      def normed(vals: IndexedSeq[Any]): IndexedSeq[Any] = vals.map {
-        case a: Array[_] => a.toSeq
-        case x => x
-      }
-      // live contents per side: normed payload -> (original payload, net count)
-      val ls = scala.collection.mutable.LinkedHashMap
-        .empty[IndexedSeq[Any], (IndexedSeq[Any], Long)]
-      val rs = scala.collection.mutable.LinkedHashMap
-        .empty[IndexedSeq[Any], (IndexedSeq[Any], Long)]
+      val nullL: IndexedSeq[Any] = IndexedSeq.fill(lp.length)(null)
+      val nullR: IndexedSeq[Any] = IndexedSeq.fill(rp.length)(null)
+      var kernel: ChangelogJoinKernel[Payload, Payload] = null
       var cur: Any = null
-      var started = false
-      val nullL: IndexedSeq[Any] = IndexedSeq.fill(lpN)(null)
-      val nullR: IndexedSeq[Any] = IndexedSeq.fill(rpN)(null)
-      def bump(m: scala.collection.mutable.LinkedHashMap[
-          IndexedSeq[Any], (IndexedSeq[Any], Long)],
-          pay: IndexedSeq[Any], w: Long): Unit = {
-        val k = normed(pay)
-        val c = m.get(k).map(_._2).getOrElse(0L) + w
-        if (c == 0L) m.remove(k) else m(k) = (pay, c)
-      }
       it.flatMap { row =>
         val gk = row.get(0)
-        if (!started || gk != cur) { ls.clear(); rs.clear(); cur = gk
-          started = true }
+        if (kernel == null || gk != cur) {
+          kernel = new ChangelogJoinKernel[Payload, Payload](joinType,
+            gk == null)
+          cur = gk
+        }
         val side = row.getInt(1)
         val kind = row.getString(2)
         val t = row.get(3)
-        val w: Long = ChangelogAgg.weightOf(kind)
+        val change =
+          if (side == 0) Left(Payload((4 until rpOff).map(row.get)))
+          else Right(Payload((rpOff until rpEnd).map(row.get)))
         val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-        def emit(l: IndexedSeq[Any], r: IndexedSeq[Any], k: String,
-            ctag: Int, m: Long): Unit = {
-          var d = 1L
-          while (d <= m) {
-            out += Row.fromSeq(l ++ r ++ Seq(k, t, side, ctag, d))
-            d += 1
+        kernel(change, kind) { (k, l, r, n) =>
+          // the relational form's component tag: a joined row is the
+          // driving side's match; a one-sided row is a padding of the
+          // driving side's change, or a transition of the other side's
+          val ctag = (l.isDefined, r.isDefined) match {
+            case (true, true) => side
+            case (true, false) => if (side == 0) 2 else 3
+            case _ => if (side == 0) 5 else 4
           }
-        }
-        if (side == 0) {
-          val pay = (lpOff until lpOff + lpN).map(row.get): IndexedSeq[Any]
-          if (gk == null) {
-            // a null key never matches and never associates — pad only
-            if (padsLeft) emit(pay, nullR, kind, 2, 1L)
-          } else {
-            val live = rs.valuesIterator.filter(_._2 > 0).toSeq
-            val cb = ls.valuesIterator.map(_._2).sum
-            if (padsRight && cb == 0L && w > 0)
-              live.foreach { case (r, c) => emit(nullL, r, "-U", 5, c) }
-            if (live.nonEmpty)
-              live.foreach { case (r, c) => emit(pay, r, kind, 0, c) }
-            else if (padsLeft) emit(pay, nullR, kind, 2, 1L)
-            if (padsRight && cb + w == 0L && w < 0)
-              live.foreach { case (r, c) => emit(nullL, r, "+U", 5, c) }
-            bump(ls, pay, w)
-          }
-        } else {
-          val pay = (rpOff until rpOff + rpN).map(row.get): IndexedSeq[Any]
-          if (gk == null) {
-            if (padsRight) emit(nullL, pay, kind, 4, 1L)
-          } else {
-            val live = ls.valuesIterator.filter(_._2 > 0).toSeq
-            val cb = rs.valuesIterator.map(_._2).sum
-            if (padsLeft && cb == 0L && w > 0)
-              live.foreach { case (l, c) => emit(l, nullR, "-U", 3, c) }
-            if (live.nonEmpty)
-              live.foreach { case (l, c) => emit(l, pay, kind, 1, c) }
-            else if (padsRight) emit(nullL, pay, kind, 4, 1L)
-            if (padsLeft && cb + w == 0L && w < 0)
-              live.foreach { case (l, c) => emit(l, nullR, "+U", 3, c) }
-            bump(rs, pay, w)
-          }
+          val pay = l.fold(nullL)(_.vals) ++ r.fold(nullR)(_.vals)
+          (1 to n).foreach(d => out +=
+            Row.fromSeq(pay ++ Seq(k, t, side, ctag, d.toLong)))
         }
         out
       }
@@ -372,4 +316,13 @@ object ChangelogJoin {
     * downstream stages. */
   def seqColumns(n: Int): Seq[String] =
     (0 until n).map(i => s"__seq_$i") ++ Seq("__side", "__eidx")
+
+  /** One side's payload as a replay multiset entry: binary fields
+    * compare by content, not by array reference. */
+  private final case class Payload(vals: IndexedSeq[Any]) {
+    private val key = vals.map { case a: Array[_] => a.toSeq; case x => x }
+    override def equals(o: Any): Boolean =
+      o.isInstanceOf[Payload] && key == o.asInstanceOf[Payload].key
+    override def hashCode: Int = key.hashCode
+  }
 }

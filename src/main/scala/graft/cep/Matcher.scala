@@ -100,7 +100,9 @@ object Matcher {
     * continuation with the advanced state; a group is a loop over its
     * sub-sequence — the NFA loop state of the reference's GroupPattern
     * (flink-cep/.../nfa/compiler/NFACompiler.java group states), NOT an
-    * unrolling, so `(A B)+` works unbounded. */
+    * unrolling, so `(A B)+` works unbounded. `events` must be ordered
+    * by `tsOf` ascending: a step's scan stops at the first event past
+    * `within`. */
   def tryFromIdx[T](events: IndexedSeq[T], start: Int, tsOf: T => Long,
       pattern: Pattern[T])
       : Option[(Int, Map[String, Seq[T]], Map[String, Seq[Int]])] = {
@@ -211,6 +213,10 @@ object Matcher {
         if (anchored || step.strict) Iterator.single(pos)
         else Iterator.range(pos, events.length + 1) // +1 allows empty-at-end
       for (sp <- startPositions) {
+        // events are time-ordered: once a start lies past `within`, so
+        // does every later one, and a non-optional step binds nothing
+        if (step.minRepeat > 0 && sp < events.length &&
+            !withinOk(events(sp), firstTs)) return None
         // notFollowedBy: the gap skipped over may not contain a
         // forbidden event; once one appears, no later start can work
         if (!es.forbiddenStrict) es.forbidden.foreach { f =>

@@ -60,7 +60,7 @@ object StreamingChangelogAgg {
             scala.collection.mutable.ArrayBuffer
               .empty[(K, Long, Double, String, Long)]
           rows.toSeq.sortBy(_._4).foreach { case (_, v, kind, seq) =>
-            val w = if (kind == "+I" || kind == "+U") 1L else -1L
+            val w = graft.cdc.ChangelogAgg.weightOf(kind)
             val (pc, ps) = (cnt, sum)
             cnt += w
             sum += w * v

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.cdc.ChangelogJoinKernel
+
 /** Unbounded stream-stream equi-join whose inputs are CHANGELOGS —
   * every input row carries a row kind (+I/-U/+U/-D), both sides may
   * update, and the operator emits the joined change stream with outer
@@ -12,21 +14,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the batch operator replays arrival order from sequence columns,
   * this one processes arrival order as it happens.
   *
-  * Semantics per arriving change (weight w = ±1 by kind):
-  *   - emit one joined row per LIVE matching row of the other side's
-  *     state (live = net count > 0, multiplicity-many emissions),
-  *     carrying the arriving change's kind;
-  *   - outer variants: no live match → the null-padded row in the
-  *     arriving kind; and when this change crosses its key's
-  *     association count through zero (0→1 insert / 1→0 retraction),
-  *     the OTHER side's live rows get their padding retracted (-U) or
-  *     restored (+U) — retract-before-add order within the event;
-  *   - finally the change applies to its own side's multiset.
+  * Per arriving change the operator runs
+  * [[graft.cdc.ChangelogJoinKernel]], the single statement of the
+  * emission rule: padding retractions, the joined rows with their
+  * multiplicity (or the null-padded row), padding restorations, then
+  * the change applies to its own side's multiset. A change under a
+  * null join key never matches and never associates — it only pads,
+  * and its key keeps no state.
   *
-  * Scale: state is the two signed multisets per key — identical to the
-  * reference's JoinRecordStateView (count per distinct row content),
-  * hash-distributed on the join key; one shuffle per side. State never
-  * stores dead contents (net 0 entries are dropped).
+  * Scale: state is the kernel's two multisets per key — the reference's
+  * JoinRecordStateView (count per live row content), hash-distributed
+  * on the join key; one shuffle per side.
   *
   * Ordering: every input row carries an explicit SEQUENCE number, and
   * a key's buffered rows are applied in (seq, side) order (left wins
@@ -42,9 +40,6 @@ object StreamingChangelogJoin {
 
   /** Changelog emission: (rowKind, left, right). */
   type Out[L, R] = (String, Option[L], Option[R])
-
-  private def weight(kind: String): Int =
-    if (kind == "+I" || kind == "+U") 1 else -1
 
   /** `joinType`: inner | left | right | full. Input rows are
     * (payload, rowKind, seq) — `seq` totally orders each side's
@@ -71,10 +66,8 @@ object StreamingChangelogJoin {
       inEnc: Encoder[(Option[(L, String, Long)], Option[(R, String, Long)])],
       stEnc: Encoder[(Seq[(L, Int)], Seq[(R, Int)])],
       outEnc: Encoder[Out[L, R]]): Dataset[Out[L, R]] = {
-    require(Set("inner", "left", "right", "full")(joinType),
+    require(ChangelogJoinKernel.JoinTypes(joinType),
       s"unsupported join type: $joinType")
-    val padsLeft = joinType == "left" || joinType == "full"
-    val padsRight = joinType == "right" || joinType == "full"
     val tagged = left
       .map(l => (Option(l), Option.empty[(R, String, Long)]))
       .unionByName(right.map(r => (Option.empty[(L, String, Long)], Option(r))))
@@ -85,80 +78,42 @@ object StreamingChangelogJoin {
       case (Some((l, _, _)), _) => lKey(l)
       case (_, Some((r, _, _))) => rKey(r)
       case _ => throw new IllegalStateException("empty tagged row")
-    }.flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-      (_: K, rows0: Iterator[(Option[(L, String, Long)], Option[(R, String, Long)])],
-          state: GroupState[(Seq[(L, Int)], Seq[(R, Int)])]) =>
-        if (state.hasTimedOut) { // TTL expiry: drop silently (reference
-          state.remove()         // StateTtlConfig semantics — no
-          Iterator.empty         // retractions for expired state)
-        } else {
-        var (ls0, rs0) = state.getOption
-          .getOrElse((Seq.empty[(L, Int)], Seq.empty[(R, Int)]))
-        val ls = scala.collection.mutable.LinkedHashMap(ls0: _*)
-        val rs = scala.collection.mutable.LinkedHashMap(rs0: _*)
-        val out = scala.collection.mutable.ArrayBuffer.empty[Out[L, R]]
-        def bump[T](m: scala.collection.mutable.LinkedHashMap[T, Int],
-            c: T, w: Int): Unit = {
-          val n = m.getOrElse(c, 0) + w
-          if (n == 0) m.remove(c) else m(c) = n
-        }
-        // apply in the global (seq, side) order — left wins seq ties —
-        // regardless of how the shuffle interleaved this trigger's rows
-        val rows = rows0.toSeq.sortBy {
-          case (Some((_, _, s)), _) => (s, 0)
-          case (_, Some((_, _, s))) => (s, 1)
-          case _ => (Long.MaxValue, 2)
-        }
-        rows.foreach { row =>
-          // one arriving change, on either side
-          val (kind, w) = row match {
-            case (Some((_, k, _)), _) => (k, weight(k))
-            case (_, Some((_, k, _))) => (k, weight(k))
-            case _ => ("+I", 1)
-          }
-          row match {
-            case (Some((l, _, _)), _) =>
-              val live = rs.toSeq.filter(_._2 > 0)
-              val cb = ls.valuesIterator.sum
-              // retract-before-add: a left insert that creates the
-              // key's first left association first retracts the
-              // (null, r) paddings, then emits its joined rows
-              if (padsRight && cb == 0 && w > 0)
-                live.foreach { case (r, cnt) =>
-                  (1 to cnt).foreach(_ => out += (("-U", None, Some(r)))) }
-              if (live.nonEmpty)
-                live.foreach { case (r, cnt) =>
-                  (1 to cnt).foreach(_ => out += ((kind, Some(l), Some(r)))) }
-              else if (padsLeft) out += ((kind, Some(l), None))
-              if (padsRight && cb + w == 0 && w < 0)
-                live.foreach { case (r, cnt) =>
-                  (1 to cnt).foreach(_ => out += (("+U", None, Some(r)))) }
-              bump(ls, l, w)
-            case (_, Some((r, _, _))) =>
-              val live = ls.toSeq.filter(_._2 > 0)
-              val cb = rs.valuesIterator.sum
-              if (padsLeft && cb == 0 && w > 0)
-                live.foreach { case (l, cnt) =>
-                  (1 to cnt).foreach(_ => out += (("-U", Some(l), None))) }
-              if (live.nonEmpty)
-                live.foreach { case (l, cnt) =>
-                  (1 to cnt).foreach(_ => out += ((kind, Some(l), Some(r)))) }
-              else if (padsRight) out += ((kind, None, Some(r)))
-              if (padsLeft && cb + w == 0 && w < 0)
-                live.foreach { case (l, cnt) =>
-                  (1 to cnt).foreach(_ => out += (("+U", Some(l), None))) }
-              bump(rs, r, w)
-            case _ => ()
-          }
-        }
-        if (ls.isEmpty && rs.isEmpty) state.remove()
-        else {
-          state.update((ls.toSeq, rs.toSeq))
-          if (stateTtlMs != Long.MaxValue)
-            state.setTimeoutDuration(stateTtlMs)
-        }
-        out.iterator
-        }
-    }
+    }.flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+      applyKey[K, L, R](joinType, stateTtlMs) _)
   }
+
+  /** One key's rows of one trigger, applied to its stored state. A null
+    * key keeps no state: its changes only pad, and state stored under
+    * it by an earlier version, which joined null keys with each other,
+    * is dropped. */
+  private[streaming] def applyKey[K, L, R](joinType: String, stateTtlMs: Long)(
+      key: K, rows: Iterator[(Option[(L, String, Long)], Option[(R, String, Long)])],
+      state: GroupState[(Seq[(L, Int)], Seq[(R, Int)])]): Iterator[Out[L, R]] =
+    if (state.hasTimedOut) { // TTL expiry: drop silently (reference
+      state.remove()         // StateTtlConfig semantics — no
+      Iterator.empty         // retractions for expired state)
+    } else {
+      val (ls0, rs0) = state.getOption.filter(_ => key != null)
+        .getOrElse((Seq.empty[(L, Int)], Seq.empty[(R, Int)]))
+      val kernel = new ChangelogJoinKernel[L, R](joinType, key == null,
+        ls0, rs0)
+      val out = scala.collection.mutable.ArrayBuffer.empty[Out[L, R]]
+      // apply in the global (seq, side) order — left wins seq ties —
+      // regardless of how the shuffle interleaved this trigger's rows
+      rows.map {
+        case (Some((l, kind, s)), _) => (s, 0, kind, Left[L, R](l))
+        case (_, Some((r, kind, s))) => (s, 1, kind, Right[L, R](r))
+        case _ => throw new IllegalStateException("empty tagged row")
+      }.toSeq.sortBy(c => (c._1, c._2)).foreach { case (_, _, kind, change) =>
+        kernel(change, kind) { (k, l, r, n) =>
+          (1 to n).foreach(_ => out += ((k, l, r))) }
+      }
+      if (kernel.isEmpty) state.remove()
+      else {
+        state.update(kernel.state)
+        if (stateTtlMs != Long.MaxValue)
+          state.setTimeoutDuration(stateTtlMs)
+      }
+      out.iterator
+    }
 }

@@ -79,6 +79,25 @@ class CepSpec extends SparkSpec {
     }
   }
 
+  test("the scan stops at `within`: predicate calls stay linear in the " +
+      "event count") {
+    // a b within 10 ms over one key where b never occurs: every start
+    // may only look 10 ms ahead, so the calls per event are bounded
+    // however long the key's history is
+    def callsPerEvent(n: Int): Double = {
+      var calls = 0L
+      val p = Pattern.begin[CE]("a").where { _ => calls += 1; true }
+        .followedBy("b").where { _ => calls += 1; false }.within(10)
+      val events = (0 until n).map(i => CE("k", i.toLong, "a"))
+      assert(matches(events, p).isEmpty)
+      calls.toDouble / n
+    }
+    val small = callsPerEvent(500)
+    val large = callsPerEvent(5000)
+    assert(large <= 20, s"$large predicate calls per event")
+    assert(large <= small * 1.1, s"per-event calls grew: $small → $large")
+  }
+
   test("within bounds first-to-last time span") {
     val p = Pattern.begin[CE]("a").where(_.typ == "a")
       .followedBy("b").where(_.typ == "b").within(1500)
