@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *   Calc (stateless project/filter — mode transparent)
   *   EnrichJoin (changelog ⋈ static dimension — mode transparent)
   *   Join (changelog ⋈ changelog, inner/left/right/full — BOTH sides
-  *         update; executed by [[ChangelogJoin]]'s batch-exact replay
-  *         of the reference StreamingJoinOperator)
+  *         update; executed by [[ChangelogJoin]]'s per-key replay of
+  *         the reference StreamingJoinOperator)
   *   GroupAgg (retractable COUNT/SUM — consumes its input's changes,
   *             produces an update stream)
   *   Sink (with or without a primary key)
@@ -98,16 +98,11 @@ object ChangelogInference {
       streamKey: String, dimKey: String) extends Node
   /** Changelog ⋈ changelog equi-join where BOTH inputs may update.
     * `joinType`: inner | left | right | full. Executed by
-    * [[ChangelogJoin.updateStream]]; both inputs' sequence columns
-    * must be comparable (same count/types) under one global order.
-    * `replay = true` switches to the per-key sequential replay
-    * ([[ChangelogJoin.updateStreamReplay]], byte-identical output) —
-    * choose it when individual keys carry heavy churn (thousands of
-    * changes per key), where the relational form's per-key join
-    * intermediate is quadratic. */
+    * [[ChangelogJoin.updateStream]], which reads each input once;
+    * both inputs' sequence columns must be comparable (same
+    * count/types) under one global order. */
   final case class Join(left: Node, right: Node, leftKey: String,
-      rightKey: String, joinType: String = "inner",
-      replay: Boolean = false) extends Node
+      rightKey: String, joinType: String = "inner") extends Node
   /** Retractable grouped COUNT/SUM over `valCol`, keyed by `keys`.
     * Output columns: keys..., cnt, sum_val, __row_kind.
     *
@@ -160,7 +155,7 @@ object ChangelogInference {
     case GroupAgg(_, keys, _, _) => Some(keys)
     case Calc(c, _) => updateKey(c) // key preservation validated in execute
     case EnrichJoin(c, _, _, _) => updateKey(c)
-    case Join(_, _, _, _, _, _) => None // join output rows are not keyed
+    case Join(_, _, _, _, _) => None // join output rows are not keyed
     case Source(_, _, _, key) => key
     case Sink(c, _) => updateKey(c)
   }
@@ -197,7 +192,7 @@ object ChangelogInference {
         if (insertOnly) InsertOnly else Retract
       case Calc(c, _) => produces(c)
       case EnrichJoin(c, _, _, _) => produces(c)
-      case Join(l, r, _, _, jt, _) =>
+      case Join(l, r, _, _, jt) =>
         // inner join of append inputs is append; everything else
         // updates (outer joins retract their null-padded rows even
         // over append inputs)
@@ -223,7 +218,7 @@ object ChangelogInference {
           walk(ch, required); produced += (ref -> produced(new Ref(ch)))
         case EnrichJoin(ch, _, _, _) =>
           walk(ch, required); produced += (ref -> produced(new Ref(ch)))
-        case j @ Join(l, r, _, _, _, _) =>
+        case j @ Join(l, r, _, _, _) =>
           // the join consumes raw retract streams on updating inputs
           Seq(l, r).foreach { ch =>
             walk(ch, if (produces(ch).isUpdating) Retract else InsertOnly)
@@ -325,9 +320,8 @@ object ChangelogInference {
     val refs = refCounts(sinks)
     val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
     val out = executeImpl(sinks, { (n, fl) =>
-      // a flow consumed from two or more places (shared branch subtree,
-      // or either input of a relational changelog join, which probes
-      // each side 2-4 times) materializes once — when re-computing it
+      // a flow consumed from two or more places (a subtree shared
+      // between branches) materializes once — when re-computing it
       // costs more than a block write. Stateful nodes (Join/GroupAgg)
       // always do; for pass-throughs and Sources the break-even is a
       // property of the wrapped PLAN, not the node type: a changelog
@@ -374,23 +368,7 @@ object ChangelogInference {
         case Source(_, _, _, _) => ()
         case Calc(c, _) => countRefs(c)
         case EnrichJoin(c, _, _, _) => countRefs(c)
-        case Join(l, rt, _, _, _, replay) =>
-          countRefs(l); countRefs(rt)
-          // the relational changelog join SCANS each input at least
-          // twice (probe + state passes; up to four for outer
-          // pads/transitions), so give each input an extra reference
-          // and let the share hook materialize it once — a stateful
-          // child would otherwise replay its window/join work per scan,
-          // and even a plain Source child re-runs its changelog
-          // explode/decode per scan (the r14 profile measured 0.3-0.7 s
-          // per rescan at sf0.1; at 100 TB each rescan is a full
-          // parquet pass, vs ONE pass plus a block write when
-          // checkpointed). The REPLAY formulation scans each input
-          // exactly once (a single union) — no bump.
-          if (!replay) Seq(l, rt).foreach { ch =>
-            val rc = new Ref(ch)
-            refs(rc) = refs.getOrElse(rc, 0) + 1
-          }
+        case Join(l, rt, _, _, _) => countRefs(l); countRefs(rt)
         case GroupAgg(c, _, _, _) => countRefs(c)
         case s: Sink => countRefs(s.child)
       }
@@ -435,18 +413,15 @@ object ChangelogInference {
       case EnrichJoin(ch, dim, sk, dk) =>
         val fl = build(ch)
         Flow(fl.df.join(broadcast(dim), col(sk) === col(dk)), fl.seq)
-      case Join(l, r, lk, rk, jt, replay) =>
+      case Join(l, r, lk, rk, jt) =>
         val fl = build(l); val fr = build(r)
         require(fl.seq.nonEmpty && fr.seq.nonEmpty,
           "Join needs arrival-order columns on both inputs")
         require(fl.seq.length == fr.seq.length,
           "Join inputs' sequence columns must be comparable " +
             s"(got ${fl.seq} vs ${fr.seq})")
-        val out =
-          if (replay) ChangelogJoin.updateStreamReplay(fl.df, fr.df, lk, rk,
-            jt, fl.seq, fr.seq)
-          else ChangelogJoin.updateStream(fl.df, fr.df, lk, rk, jt,
-            fl.seq, fr.seq)
+        val out = ChangelogJoin.updateStream(fl.df, fr.df, lk, rk, jt,
+          fl.seq, fr.seq)
         Flow(out, ChangelogJoin.seqColumns(fl.seq.length))
       case a @ GroupAgg(c, keys, valCol, localBuckets) =>
         val fl = build(c)

@@ -5,7 +5,7 @@ import scala.collection.mutable
 /** The per-key state machine of a changelog ⋈ changelog join: the one
   * statement of its emission rule, run by the streaming operator
   * ([[graft.streaming.StreamingChangelogJoin]]) and the batch replay
-  * ([[ChangelogJoin.updateStreamReplay]]). Reference:
+  * ([[ChangelogJoin.updateStream]]). Reference:
   * StreamingJoinOperator.java:37 with the association counting of
   * OuterJoinRecordStateViews.java:336.
   *

@@ -38,23 +38,25 @@ object ConnectedComponents {
     // materialize the caller's edge list ONCE before mirroring — the
     // union below has two branches and would otherwise execute an
     // expensive upstream pair generator (O(N^2) exact or the LSH
-    // bucket join) twice
-    val sym0 = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .localCheckpoint(true)
-    // right-size the iteration: per-round cost is dominated by task
-    // scheduling when the edge list is far smaller than the partition
-    // count (a 500-pair graph on 32 partitions runs 32 near-empty tasks
-    // per job). ~500k edges per partition keeps rounds cheap at every
-    // scale — on 100 TB the quotient, not the constant, governs.
-    val nEdges = 2 * sym0.count()
+    // bucket join) twice. Its count, taken by the checkpoint's own
+    // job, right-sizes the iteration: per-round cost is dominated by
+    // task scheduling when the edge list is far smaller than the
+    // partition count (a 500-pair graph on 32 partitions runs 32
+    // near-empty tasks per job). ~500k edges per partition keeps
+    // rounds cheap at every scale — on 100 TB the quotient, not the
+    // constant, governs.
+    val (sym0, count0, releaseSym0) = Checkpoints.trackedMeasured(
+      edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst")),
+      count(lit(1)))
+    val nEdges = 2 * count0.getLong(0)
     val parts = math.max(1L, nEdges / 500000L).toInt
     // undirected: propagate both ways
-    val und = sym0
+    val (und, releaseUnd) = Checkpoints.tracked(sym0
       .union(sym0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .coalesce(parts)
-      .localCheckpoint(true)
+      .coalesce(parts))
+    releaseSym0() // und is materialized; the one-way list is dead
     // the iteration's shuffles (groupBy + joins each round) must run at
     // the graph's parallelism, not the session default: 32-partition
     // shuffles on a 1000-edge graph cost more in task scheduling than
@@ -64,9 +66,11 @@ object ConnectedComponents {
     val spark = edges.sparkSession
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
-      iterate(und, nEdges, maxIter)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    try iterate(und, nEdges, maxIter)
+    finally {
+      releaseUnd() // every label table is a checkpoint of its own
+      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   private def iterate(und: DataFrame, nEdges: Long,

@@ -91,6 +91,7 @@ object Similarity {
       col(relCol).as("__rel"), col(vecCol).as("__vec"))
     var selected: DataFrame = null
     var remaining = base
+    var release = () => ()
     for (i <- 1 to k) {
       def q20(c: Column): Column = floor(c * 1048576) / lit(1048576.0)
       val scored =
@@ -112,15 +113,20 @@ object Similarity {
         .filter(col("__rn") === 1)
         .select(col("__qid"), col("__id"), col("__rel"), col("__vec"),
           col("__mmr"), lit(i).as("__selrank"))
-      // localCheckpoint caps lineage: without it `remaining` chains k
-      // left_anti joins and `selected` a k-way union (O(k^2) plan
-      // growth), same discipline as the Pregel-style loops
-      selected = (if (selected == null) pick else selected.unionByName(pick))
-        .localCheckpoint(true)
-      remaining = remaining.join(
-        pick.select(col("__qid"), col("__id")), Seq("__qid", "__id"),
-        "left_anti")
-        .localCheckpoint(true)
+      // a checkpoint per round caps lineage: without it `remaining`
+      // chains k left_anti joins and `selected` a k-way union (O(k^2)
+      // plan growth), same discipline as the Pregel-style loops; the
+      // last round's `remaining` is never read, so it is not built
+      val (sel, releaseSel) = Checkpoints.tracked(
+        if (selected == null) pick else selected.unionByName(pick))
+      val (rem, releaseRem) =
+        if (i == k) (remaining, () => ())
+        else Checkpoints.tracked(remaining.join(
+          pick.select(col("__qid"), col("__id")), Seq("__qid", "__id"),
+          "left_anti"))
+      release() // round t is materialized; round t-1 is dead
+      selected = sel; remaining = rem
+      release = () => { releaseSel(); releaseRem() }
     }
     selected.select(col("__qid").as(qidCol), col("__id").as(idCol),
       col("__rel").as(relCol), col("__mmr").as("mmr"),

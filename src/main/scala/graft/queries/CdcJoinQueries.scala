@@ -103,14 +103,10 @@ object CdcJoinQueries {
       ORDER BY nationkey""")),
 
 
-    // The SAME left-outer chain executed through the per-key
-    // sequential REPLAY formulation (ChangelogJoin.updateStreamReplay
-    // — one shuffle per side onto the join key, spill-safe sort, the
-    // streaming operator's state machine per key; linear in per-key
-    // churn where the relational form's join intermediate is
-    // quadratic). Identical oracle: a divergence between the two
-    // formulations anywhere in the pad/transition logic
-    // hash-mismatches this query against q_cdc_join_outer's answer.
+    // The SAME left-outer chain as q_cdc_join_outer, kept as its own
+    // oracled query: both run the one changelog join
+    // (ChangelogJoin.updateStream, the per-key replay of the streaming
+    // operator's state machine) on the same plan and oracle.
     QueryDef("q_cdc_join_replay", (s, dir) => {
       import ChangelogInference._
       val plan = Sink(
@@ -118,7 +114,7 @@ object CdcJoinQueries {
           Join(
             Source(CdcData.customerChangelog(s, dir), seqCols = Seq("seq", "stage")),
             Source(CdcData.orderChangelog(s, dir), seqCols = Seq("seq", "stage")),
-            "c_custkey", "o_custkey", "left", replay = true),
+            "c_custkey", "o_custkey", "left"),
           Seq("c_nationkey"), "v"),
         primaryKey = Some(Seq("c_nationkey")))
       ChangelogInference.execute(plan)

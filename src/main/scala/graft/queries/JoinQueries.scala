@@ -141,7 +141,9 @@ object JoinQueries {
 
     // As-of join: each purchase gets the latest prior click per user,
     // both sides derived from ONE events frame (the as-of operator
-    // re-aliases the right side). Reference:
+    // re-aliases the right side). The clicks are clustered by user_id
+    // before their pre-aggregation, so one exchange serves both the
+    // aggregate and the join (in both as-of queries). Reference:
     // TemporalRowTimeJoinOperator.java:78; DuckDB oracle uses its
     // native ASOF JOIN.
     QueryDef("q_asof_join", (s, dir) => {
@@ -149,6 +151,7 @@ object JoinQueries {
       val purchases = e.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("ts"), col("value"))
       val clicks = e.filter(col("event_type") === "click")
+        .repartition(col("user_id"))
         .groupBy(col("user_id"), col("ts"))
         .agg(max(col("value")).as("click_value"))
       AsOfJoin.backward(purchases, clicks, "user_id", "ts",
@@ -171,6 +174,7 @@ object JoinQueries {
       val purchases = e1.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("ts"), col("value"))
       val clicks = e2.filter(col("event_type") === "click")
+        .repartition(col("user_id"))
         .groupBy(col("user_id"), col("ts"))
         .agg(max(col("value")).as("click_value"))
       AsOfJoin.backward(purchases, clicks, "user_id", "ts",

@@ -440,4 +440,14 @@ class PlanSpec extends SparkSpec {
     assert("BroadcastHashJoin".r.findAllIn(p).size == 2, p)
     assert(p.contains("TakeOrderedAndProject"), p)
   }
+
+  test("q_asof_join and q_asof_join_planned shuffle the clicks once") {
+    // the clicks are clustered by user_id before their pre-aggregation,
+    // so that exchange also serves the as-of join: one exchange per side
+    Seq("q_asof_join", "q_asof_join_planned").foreach { q =>
+      val p = plan(q)
+      assert("Exchange".r.findAllIn(p).size == 2, s"$q:\n$p")
+      assert(p.contains("AsOfJoin"), s"$q:\n$p")
+    }
+  }
 }

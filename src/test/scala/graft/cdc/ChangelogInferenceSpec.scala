@@ -187,24 +187,31 @@ class ChangelogInferenceSpec extends SparkSpec {
   }
 
   test("stateful subtrees under a changelog join materialize once") {
-    // the changelog join scans each input 2-4 times (probe + state
-    // passes); a GroupAgg child would replay its window work per scan.
-    // refCounts gives each join input an extra reference and the share
-    // hook checkpoints any multiply-consumed flow whose plan is
-    // expensive to recompute — even in a single-sink plan.
+    // the changelog join reads each input once (one union), so a
+    // single-sink join over two GroupAgg inputs checkpoints nothing and
+    // its plan computes each input aggregate exactly once
     val l = Calc(GroupAgg(Source(srcDf, seqCols = Seq("seq")), Seq("k"), "v"),
       _.withColumnRenamed("cnt", "lc").withColumnRenamed("sum_val", "lv"))
     val rDf = Seq(("a", 1.0, "+I", 1L), ("b", 2.0, "+I", 2L))
       .toDF("k2", "w", K, "seq")
     val r = Calc(GroupAgg(Source(rDf, seqCols = Seq("seq")), Seq("k2"), "w"),
       _.withColumnRenamed("cnt", "rc").withColumnRenamed("sum_val", "rv"))
+    val j = Join(l, r, "k", "k2", "inner")
     val before = spark.sparkContext.getPersistentRDDs.keySet
+    val single = ChangelogInference.execute(Sink(j))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "a join input consumed once must not checkpoint")
+    val p = single.queryExecution.executedPlan.toString
+    assert("LocalTableScan".r.findAllIn(p).size == 2,
+      s"each input aggregate is computed once:\n$p")
+    assert(single.count() > 0)
+    // one Join instance feeding two sinks (a diamond) materializes once,
+    // and release() drops exactly that checkpoint
     val (results, release) =
-      ChangelogInference.executeReleasable(Seq(Sink(Join(l, r, "k", "k2", "inner"))))
+      ChangelogInference.executeReleasable(Seq(Sink(j), Sink(j)))
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.size >= 2,
-      s"both join inputs' aggregates must checkpoint once (got ${added.size})")
-    assert(results.head.count() > 0)
+    assert(added.nonEmpty, "the shared join must checkpoint at execute()")
+    assert(results.forall(_.count() > 0))
     release()
     val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
     while (System.nanoTime() < deadline &&

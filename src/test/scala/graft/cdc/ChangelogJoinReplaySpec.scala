@@ -5,24 +5,17 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-/** [[ChangelogJoin.updateStreamReplay]] (per-key sequential replay of
-  * the streaming join's state machine) must be BYTE-IDENTICAL to
-  * [[ChangelogJoin.updateStream]] (the relational all-pairs
-  * formulation) — same rows, same kinds, same (__seq, __side, __eidx)
-  * total order — so the two are interchangeable wherever a changelog
-  * join appears; only the scale shape differs (linear in per-key churn
-  * vs O(E·S) join intermediate). */
+/** [[ChangelogJoin.updateStream]] (per-key sequential replay of the
+  * streaming join's state machine) against [[ChangelogJoinModel]]: the
+  * emission multiset of every driving event equals the model's, and
+  * the (__seq, __side, __eidx) total order does not depend on how the
+  * inputs are partitioned — the dumps of one input through ONE
+  * partition and through seven are identical row for row. */
 class ChangelogJoinReplaySpec extends SparkSpec {
   import spark.implicits._
+  import ChangelogJoinModel.{Event, multiset, simulate}
 
   private val K = ChangelogFormats.RowKindCol
-
-  private def frames(events: Seq[(Int, String, Int, String, Long)])
-      : (DataFrame, DataFrame) = (
-    events.filter(_._1 == 0)
-      .map(e => (e._2, e._3, e._4, e._5)).toDF("lk", "ltag", K, "lseq"),
-    events.filter(_._1 == 1)
-      .map(e => (e._2, e._3, e._4, e._5)).toDF("rk", "rtag", K, "rseq"))
 
   /** Total-order dump: every column, ordered by the emission's total
     * order — exact equality catches a wrong kind, payload, multiplicity
@@ -31,13 +24,22 @@ class ChangelogJoinReplaySpec extends SparkSpec {
     df.orderBy(col("__seq_0"), col("__side"), col("__eidx"))
       .collect().map(_.toString).toSeq
 
-  private def bothWays(events: Seq[(Int, String, Int, String, Long)],
-      jt: String): (Seq[String], Seq[String]) = {
-    val (l, r) = frames(events)
-    (dump(ChangelogJoin.updateStream(l, r, "lk", "rk", jt,
-        Seq("lseq"), Seq("rseq"))),
-      dump(ChangelogJoin.updateStreamReplay(l, r, "lk", "rk", jt,
-        Seq("lseq"), Seq("rseq"))))
+  private def join(l: DataFrame, r: DataFrame, jt: String): DataFrame =
+    ChangelogJoin.updateStream(l, r, "lk", "rk", jt, Seq("lseq"), Seq("rseq"))
+
+  /** Checks the join of `events` against the model and the
+    * one-partition dump against the seven-partition one; returns the
+    * dump. */
+  private def checked(events: Seq[Event], jt: String): Seq[String] = {
+    val (l, r) = ChangelogJoinModel.frames(spark, events)
+    val joined = join(l.coalesce(1), r.coalesce(1), jt)
+    val got = multiset(ChangelogJoinModel.emissions(joined))
+    val want = multiset(simulate(events, jt))
+    assert(got == want, s"jt=$jt evs=$events\n got=$got\n want=$want")
+    val one = dump(joined)
+    val seven = dump(join(l.repartition(7), r.repartition(7), jt))
+    assert(one == seven, s"jt=$jt\n one=$one\n seven=$seven")
+    one
   }
 
   test("hand case: outer padding + transitions identical in both forms") {
@@ -47,53 +49,75 @@ class ChangelogJoinReplaySpec extends SparkSpec {
       (0, "b", 2, "+I", 3L), // pad (b2, null)
       (1, "a", 7, "-D", 4L), // -D (a1, r7), then +U pad
       (0, "a", 1, "-D", 5L)) // death of a1 (no live right match)
-    for (jt <- Seq("inner", "left", "right", "full")) {
-      val (rel, rep) = bothWays(ev, jt)
-      assert(rel == rep, s"jt=$jt\nrel=$rel\nrep=$rep")
-    }
+    for (jt <- Seq("inner", "left", "right", "full")) checked(ev, jt)
   }
 
   test("null join keys never match, never associate — pads only") {
-    val l = Seq((Option.empty[String], 1, "+I", 1L),
-        (Some("a"), 2, "+I", 3L))
-      .toDF("lk", "ltag", K, "lseq")
-    val r = Seq((Some("a"), 9, "+I", 2L), (Option.empty[String], 8, "+I", 4L))
-      .toDF("rk", "rtag", K, "rseq")
-    for (jt <- Seq("inner", "left", "right", "full")) {
-      val rel = dump(ChangelogJoin.updateStream(l, r, "lk", "rk", jt,
-        Seq("lseq"), Seq("rseq")))
-      val rep = dump(ChangelogJoin.updateStreamReplay(l, r, "lk", "rk", jt,
-        Seq("lseq"), Seq("rseq")))
-      assert(rel == rep, s"jt=$jt\nrel=$rel\nrep=$rep")
-    }
+    val ev: Seq[Event] = Seq(
+      (0, null, 1, "+I", 1L), (1, "a", 9, "+I", 2L),
+      (0, "a", 2, "+I", 3L), (1, null, 8, "+I", 4L))
+    for (jt <- Seq("inner", "left", "right", "full")) checked(ev, jt)
   }
+
+  /** Per emission of a full join, in total order: the kind, whether
+    * the left payload `lCol` is present, and the right tag. */
+  private def shape(df: DataFrame, lCol: String): Seq[(String, Boolean, Option[Int])] =
+    df.orderBy(col("__seq_0"), col("__side"), col("__eidx"))
+      .select(col(K), col(lCol).isNotNull, col("rtag"))
+      .as[(String, Boolean, Option[Int])].collect().toSeq
+
+  /** Left +I of one content @1, right +I @2, the left -D of an equal
+    * content built apart @3, right +I @4. The padding of the right row
+    * returns at @3 in any case (the association count is a running
+    * total), but the right insert at @4 finds no live left row — it is
+    * padded — only if the -D found the +I's state entry. */
+  private val retracted = Seq(("+I", true, None), ("-U", true, None),
+    ("+I", true, Some(7)), ("-D", true, Some(7)), ("+U", false, Some(7)),
+    ("+I", false, Some(8)))
 
   test("binary payloads: value equality in the replay multiset") {
     // Array[Byte] payloads compare by reference in Scala — the replay's
     // multiset key must wrap them, or a retraction of byte-equal
     // content would miss its state entry
-    val l = Seq((("a"), Array[Byte](1, 2), "+I", 1L),
-        (("a"), Array[Byte](1, 2), "-D", 3L))
+    val l = Seq(("a", Array[Byte](1, 2), "+I", 1L),
+        ("a", Array[Byte](1, 2), "-D", 3L))
       .toDF("lk", "lbin", K, "lseq")
-    val r = Seq((("a"), 7, "+I", 2L)).toDF("rk", "rtag", K, "rseq")
-    def show(df: DataFrame): Seq[String] =
-      df.withColumn("lbin", base64(col("lbin")))
-        .orderBy(col("__seq_0"), col("__side"), col("__eidx"))
-        .collect().map(_.toString).toSeq
-    val rel = show(ChangelogJoin.updateStream(l, r, "lk", "rk", "full",
-      Seq("lseq"), Seq("rseq")))
-    val rep = show(ChangelogJoin.updateStreamReplay(l, r, "lk", "rk", "full",
-      Seq("lseq"), Seq("rseq")))
-    assert(rel == rep, s"rel=$rel\nrep=$rep")
-    // the right row's padding must RETURN after the left content dies —
-    // which only happens if the -D found the byte-equal state entry
-    assert(rep.last.contains("+U"), rep.toString)
+    val r = Seq(("a", 7, "+I", 2L), ("a", 8, "+I", 4L))
+      .toDF("rk", "rtag", K, "rseq")
+    // the same history with the binary content as tag 12
+    checked(Seq((0, "a", 12, "+I", 1L), (1, "a", 7, "+I", 2L),
+      (0, "a", 12, "-D", 3L), (1, "a", 8, "+I", 4L)), "full")
+    val got = join(l, r, "full")
+    assert(shape(got, "lbin") == retracted)
+    assert(ChangelogJoinModel.multiset(
+      got.select(base64(col("lbin"))).as[Option[String]].collect().toSeq) ==
+      Map(Some("AQI=") -> 4, None -> 2))
+  }
+
+  test("MAP payloads: an equal map retracts its state entry") {
+    // equal maps in different entry order, with binary values inside
+    def m(entries: (String, Array[Byte])*) = entries.toMap
+    val l = Seq(
+        ("a", m("x" -> Array[Byte](1), "y" -> Array[Byte](2)), "+I", 1L),
+        ("a", m("y" -> Array[Byte](2), "x" -> Array[Byte](1)), "-D", 3L))
+      .toDF("lk", "lmap", K, "lseq")
+    val r = Seq(("a", 7, "+I", 2L), ("a", 8, "+I", 4L))
+      .toDF("rk", "rtag", K, "rseq")
+    assert(shape(join(l, r, "full"), "lmap") == retracted)
+  }
+
+  test("NaN payloads and binary join keys compare as Spark's grouping does") {
+    val l = Seq((Array[Byte](5), Double.NaN, "+I", 1L),
+        (Array[Byte](5), Double.NaN, "-D", 3L))
+      .toDF("lk", "lv", K, "lseq")
+    val r = Seq((Array[Byte](5), 7, "+I", 2L), (Array[Byte](5), 8, "+I", 4L))
+      .toDF("rk", "rtag", K, "rseq")
+    assert(shape(join(l, r, "full"), "lv") == retracted)
   }
 
   test("churn-heavy key: long alternating update chain stays identical") {
     // one hot key updated many times on both sides — the shape where
-    // the relational form's per-key intermediate is quadratic and the
-    // replay is linear; correctness must hold regardless
+    // the per-key state machine runs long chains; correctness must hold
     val churn = (0 until 120).flatMap { i =>
       val base = i * 4L
       Seq((0, "hot", i % 3, if (i % 2 == 0) "+I" else "-D", base + 1),
@@ -108,11 +132,7 @@ class ChangelogJoinReplaySpec extends SparkSpec {
       if (n < 0) None
       else { liveCount((side, tag)) = n; Some((side, k, tag, kind, seq)) }
     }
-    for (jt <- Seq("inner", "full")) {
-      val (rel, rep) = bothWays(ev, jt)
-      assert(rel == rep, s"jt=$jt sizes rel=${rel.size} rep=${rep.size}")
-      assert(rel.nonEmpty)
-    }
+    for (jt <- Seq("inner", "full")) assert(checked(ev, jt).nonEmpty)
   }
 
   private def check(p: Prop, n: Int): Unit = {
@@ -139,11 +159,7 @@ class ChangelogJoinReplaySpec extends SparkSpec {
         if (n < 0) None
         else { liveCount(id) = n; Some((side, k, tag, kind, (i + 1).toLong)) }
       }
-      evs.isEmpty || {
-        val (rel, rep) = bothWays(evs, jt)
-        if (rel != rep) println(s"MISMATCH jt=$jt evs=$evs\nrel=$rel\nrep=$rep")
-        rel == rep
-      }
+      evs.isEmpty || { checked(evs, jt); true }
     }, n = 12)
   }
 }

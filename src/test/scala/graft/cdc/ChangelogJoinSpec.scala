@@ -4,10 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-/** The changelog ⋈ changelog replay vs a single-threaded reference
-  * simulator of the streaming join operator (state multisets + outer
-  * association counting, events processed in (seq, side) order —
-  * exactly StreamingJoinOperator/OuterJoinRecordStateViews semantics).
+/** The changelog ⋈ changelog replay vs [[ChangelogJoinModel]], a
+  * single-threaded reference simulator of the streaming join operator.
   * Compares the full EMISSION MULTISET per driving event, not just net
   * state — a wrong transition or a miscounted multiplicity anywhere
   * shows up as a differing multiset. */
@@ -16,90 +14,17 @@ class ChangelogJoinSpec extends SparkSpec {
 
   private val K = ChangelogFormats.RowKindCol
 
-  // one emitted row: (driving seq, driving side, left payload or null,
-  // right payload or null, kind)
-  private type Emit = (Long, Int, Option[(String, Int)], Option[(String, Int)], String)
-
-  /** Reference simulator. Events: (side 0|1, key, tag, kind, seq).
-    * Payload identity is (key, tag). */
-  private def simulate(events: Seq[(Int, String, Int, String, Long)],
-      joinType: String): Seq[Emit] = {
-    def w(kind: String) = if (kind == "+I" || kind == "+U") 1 else -1
-    // state per side: key -> content(tag) -> net count
-    val state = Array(
-      scala.collection.mutable.Map.empty[String, scala.collection.mutable.Map[Int, Int]],
-      scala.collection.mutable.Map.empty[String, scala.collection.mutable.Map[Int, Int]])
-    val padsLeft = joinType == "left" || joinType == "full"
-    val padsRight = joinType == "right" || joinType == "full"
-    val out = scala.collection.mutable.ArrayBuffer.empty[Emit]
-    // process in (seq, side): left first on equal seq
-    for ((side, key, tag, kind, seq) <- events.sortBy(e => (e._5, e._1))) {
-      val mine = state(side).getOrElseUpdate(key,
-        scala.collection.mutable.Map.empty)
-      val other = state(1 - side).getOrElse(key,
-        scala.collection.mutable.Map.empty[Int, Int])
-      def pair(oTag: Int): (Option[(String, Int)], Option[(String, Int)]) =
-        if (side == 0) (Some((key, tag)), Some((key, oTag)))
-        else (Some((key, oTag)), Some((key, tag)))
-      val live = other.toSeq.filter(_._2 > 0)
-      if (live.nonEmpty) {
-        for ((oTag, cnt) <- live; _ <- 1 to cnt) {
-          val (l, r) = pair(oTag)
-          out += ((seq, side, l, r, kind))
-        }
-      } else if ((side == 0 && padsLeft) || (side == 1 && padsRight)) {
-        // no live match: emit the null-padded row in the event's kind
-        val (l, r) =
-          if (side == 0) (Some((key, tag)), None)
-          else (None, Some((key, tag)))
-        out += ((seq, side, l, r, kind))
-      }
-      // association-count transition for the OTHER side's padding
-      val cb = mine.values.sum
-      val ca = cb + w(kind)
-      val otherPads = if (side == 0) padsRight else padsLeft
-      if (otherPads) {
-        val transKind =
-          if (cb == 0 && w(kind) > 0) Some("-U")
-          else if (ca == 0 && w(kind) < 0) Some("+U")
-          else None
-        transKind.foreach { tk =>
-          for ((oTag, cnt) <- live; _ <- 1 to cnt) {
-            val (l, r) =
-              if (side == 0) (None, Some((key, oTag)))
-              else (Some((key, oTag)), None)
-            out += ((seq, side, l, r, tk))
-          }
-        }
-      }
-      // apply the event to its own state
-      mine(tag) = mine.getOrElse(tag, 0) + w(kind)
-    }
-    out.toSeq
-  }
+  import ChangelogJoinModel.{Emit, simulate}
 
   private def runJoin(events: Seq[(Int, String, Int, String, Long)],
       joinType: String): Seq[Emit] = {
-    val l = events.filter(_._1 == 0)
-      .map(e => (e._2, e._3, e._4, e._5)).toDF("lk", "ltag", K, "lseq")
-    val r = events.filter(_._1 == 1)
-      .map(e => (e._2, e._3, e._4, e._5)).toDF("rk", "rtag", K, "rseq")
-    ChangelogJoin.updateStream(l, r, "lk", "rk", joinType,
-        Seq("lseq"), Seq("rseq"))
-      .collect().toSeq.map { row =>
-      def opt(k: String, t: String): Option[(String, Int)] =
-        if (row.isNullAt(row.fieldIndex(k))) None
-        else Some((row.getString(row.fieldIndex(k)),
-          row.getInt(row.fieldIndex(t))))
-      (row.getLong(row.fieldIndex("__seq_0")),
-        row.getInt(row.fieldIndex("__side")),
-        opt("lk", "ltag"), opt("rk", "rtag"),
-        row.getString(row.fieldIndex(K)))
-    }
+    val (l, r) = ChangelogJoinModel.frames(spark, events)
+    ChangelogJoinModel.emissions(ChangelogJoin.updateStream(l, r, "lk", "rk",
+      joinType, Seq("lseq"), Seq("rseq")))
   }
 
   private def asMultiset(e: Seq[Emit]): Map[Emit, Int] =
-    e.groupBy(identity).view.mapValues(_.size).toMap
+    ChangelogJoinModel.multiset(e)
 
   test("hand case: inner join emits matches with multiplicities") {
     // l: +I(a,1)@1, +I(a,2)@3 ; r: +I(a,10)@2, +I(a,10)@4 (dup content)

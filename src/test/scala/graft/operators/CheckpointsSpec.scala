@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{JobCount, SparkSpec}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class CheckpointsSpec extends SparkSpec {
@@ -40,5 +41,40 @@ class CheckpointsSpec extends SparkSpec {
     val e = intercept[Exception](Checkpoints.trackedMeasured(bad, count(lit(1))))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("boom")))
+  }
+
+  /** The persistent RDDs `run` leaves behind, once the asynchronous
+    * unpersists of its releases have landed (polled up to 10 s). */
+  private def leftPersistent(run: => Unit): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    run
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (System.nanoTime() < deadline &&
+      (sc.getPersistentRDDs.keySet -- before).size > 1)
+      Thread.sleep(50)
+    (sc.getPersistentRDDs.keySet -- before).toSet
+  }
+
+  test("iterative operators keep only the returned frame's checkpoint") {
+    val cands = (1 to 6).map { i =>
+      (i % 2L, i.toLong, 1.0 - i / 10.0, Array(i.toFloat, (7 - i).toFloat))
+    }.toDF("qid", "id", "rel", "vec")
+    var mmr: Array[org.apache.spark.sql.Row] = null
+    val mmrLeft = leftPersistent {
+      val out = Similarity.mmrRerank(cands, "qid", "id", "rel", "vec", k = 3)
+      mmr = out.collect()
+    }
+    assert(mmrLeft.size == 1, s"mmrRerank left $mmrLeft persistent")
+    assert(mmr.length == 6)
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("s", "d")
+    var comps: DataFrame = null
+    val ccLeft = leftPersistent {
+      comps = ConnectedComponents.components(edges, "s", "d")
+    }
+    assert(ccLeft.size == 1, s"components left $ccLeft persistent")
+    // the surviving checkpoint is the returned labels: still readable
+    assert(comps.as[(Long, Long)].collect().toMap == Map(1L -> 1L, 2L -> 1L,
+      3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 }

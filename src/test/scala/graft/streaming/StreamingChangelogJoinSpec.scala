@@ -6,17 +6,16 @@ import org.apache.spark.api.java.Optional
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, TestGroupState}
 
 import graft.SparkSpec
-import graft.cdc.{ChangelogFormats, ChangelogJoin}
+import graft.cdc.{ChangelogJoin, ChangelogJoinModel}
 
 /** The streaming changelog⋈changelog join against its batch twin: the
   * same event sequence fed one micro-batch at a time must emit exactly
   * the multiset [[ChangelogJoin.updateStream]] replays from sequence
   * columns — the two operators implement one semantics (the reference
-  * StreamingJoinOperator) from opposite ends. */
+  * StreamingJoinOperator) from opposite ends — and the batch side is
+  * checked against [[graft.cdc.ChangelogJoinModel]] on every call. */
 class StreamingChangelogJoinSpec extends SparkSpec {
   import spark.implicits._
-
-  private val K = ChangelogFormats.RowKindCol
 
   // (side 0|1, key, tag, kind) — both sides update, a content update
   // (-U/+U), deletions, and a key whose right side dies and revives
@@ -30,24 +29,12 @@ class StreamingChangelogJoinSpec extends SparkSpec {
   private type P = (String, Int)
   private type Emit = (Option[P], Option[P], String)
 
-  private def batchEmissions(jt: String): Map[Emit, Int] = {
-    val l = events.zipWithIndex.filter(_._1._1 == 0)
-      .map { case ((_, k, tag, kind), i) => (k, tag, kind, i.toLong) }
-      .toDF("lk", "ltag", K, "lseq")
-    val r = events.zipWithIndex.filter(_._1._1 == 1)
-      .map { case ((_, k, tag, kind), i) => (k, tag, kind, i.toLong) }
-      .toDF("rk", "rtag", K, "rseq")
-    ChangelogJoin.updateStream(l, r, "lk", "rk", jt,
-        Seq("lseq"), Seq("rseq"))
-      .collect().toSeq.map { row =>
-        def opt(k: String, t: String): Option[P] =
-          if (row.isNullAt(row.fieldIndex(k))) None
-          else Some((row.getString(row.fieldIndex(k)),
-            row.getInt(row.fieldIndex(t))))
-        (opt("lk", "ltag"), opt("rk", "rtag"),
-          row.getString(row.fieldIndex(K)))
-      }.groupBy(identity).view.mapValues(_.size).toMap
-  }
+  /** The batch operator's emissions for `events` (seq = position),
+    * checked against [[ChangelogJoinModel]] first: the batch operator
+    * shares its kernel with the streaming one, so only the model is an
+    * independent reference. */
+  private def batchEmissions(jt: String): Map[Emit, Int] =
+    replayEmissions(events, Seq(jt)).map { case ((_, e), n) => e -> n }
 
   /** `batchSizes`: how many events to feed per micro-batch — 1 is the
     * original one-event-per-trigger feed; larger batches exercise the
@@ -127,27 +114,23 @@ class StreamingChangelogJoinSpec extends SparkSpec {
 
   private type Ev = (Int, String, Int, String) // (side, key, tag, kind)
 
-  /** [[ChangelogJoin.updateStreamReplay]]'s emissions per join type,
-    * seq = position in `evs`. A side is present when its tag is. */
+  /** [[ChangelogJoin.updateStream]]'s emissions per join type,
+    * seq = position in `evs`, each checked against
+    * [[ChangelogJoinModel]]. A side is present when its tag is. */
   private def replayEmissions(evs: Seq[Ev], jts: Seq[String])
       : Map[(String, Emit), Int] = {
-    def side(s: Int, k: String, tag: String, seq: String) =
-      evs.zipWithIndex.filter(_._1._1 == s)
-        .map { case ((_, key, t, kind), i) => (key, t, kind, i.toLong) }
-        .toDF(k, tag, K, seq)
-    val (l, r) = (side(0, "lk", "ltag", "lseq"), side(1, "rk", "rtag", "rseq"))
+    val indexed = evs.zipWithIndex.map { case ((s, k, tag, kind), i) =>
+      (s, k, tag, kind, i.toLong) }
+    val (l, r) = ChangelogJoinModel.frames(spark, indexed)
+    def unordered(e: Seq[ChangelogJoinModel.Emit]): Map[Emit, Int] =
+      ChangelogJoinModel.multiset(e.map { case (_, _, lp, rp, k) => (lp, rp, k) })
     jts.flatMap { jt =>
-      ChangelogJoin.updateStreamReplay(l, r, "lk", "rk", jt,
-          Seq("lseq"), Seq("rseq"))
-        .collect().toSeq.map { row =>
-          def opt(k: String, t: String): Option[P] =
-            if (row.isNullAt(row.fieldIndex(t))) None
-            else Some((row.getString(row.fieldIndex(k)),
-              row.getInt(row.fieldIndex(t))))
-          (jt, (opt("lk", "ltag"), opt("rk", "rtag"),
-            row.getString(row.fieldIndex(K))))
-        }
-    }.groupBy(identity).view.mapValues(_.size).toMap
+      val got = unordered(ChangelogJoinModel.emissions(ChangelogJoin.updateStream(
+        l, r, "lk", "rk", jt, Seq("lseq"), Seq("rseq"))))
+      val want = unordered(ChangelogJoinModel.simulate(indexed, jt))
+      assert(got == want, s"jt=$jt evs=$evs\n got=$got\n want=$want")
+      got.map { case (e, n) => (jt, e) -> n }
+    }.toMap
   }
 
   /** The streaming operator's emissions per join type, all join types
