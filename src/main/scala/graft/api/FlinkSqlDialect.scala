@@ -150,7 +150,7 @@ object FlinkSqlDialect {
           "where state TTL has no meaning; on streams use the operator " +
           "knobs — StreamingChangelogJoin.join(stateTtlMs=...), " +
           "StreamingChangelogAgg.updateStream(stateTtlMs=...), " +
-          "StatefulOps.keepLastWithTtl, TwsOps TTLConfig")
+          "StatefulOps.keepLast(stateTtlMs=...)")
     }
     out = hintBlock.replaceAllIn(out, m =>
       Regex.quoteReplacement(m.matched

@@ -19,61 +19,60 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * All operators also work on batch Datasets (Spark runs
   * flatMapGroupsWithState in batch mode with empty initial state),
-  * which is how the driver's batch gate exercises them.
+  * which is how the driver's batch gate exercises them, and under
+  * both state-store providers (HDFS-backed and RocksDB). Idle-state
+  * TTL follows one rule, [[IdleStateTtl]], shared with the changelog
+  * join and aggregate.
   */
 object StatefulOps {
 
   /** Deduplicate keep-last: emit the latest row per key (by `seqFn`,
     * e.g. event-time micros) whenever it changes — update semantics,
-    * exactly Flink's deduplication with keep-last-row. O(1) state. */
-  def keepLast[K, T](ds: Dataset[T], keyFn: T => K, seqFn: T => Long)(
+    * exactly Flink's deduplication with keep-last-row. O(1) state.
+    *
+    * `stateTtlMs`: idle state retention (table.exec.state.ttl) under
+    * [[IdleStateTtl]]'s rule; a row for an expired key is emitted as the
+    * key's first. Every row re-arms the key's timer, also one that does
+    * not replace the stored row. Default Long.MaxValue = keep forever. */
+  def keepLast[K, T](ds: Dataset[T], keyFn: T => K, seqFn: T => Long,
+      stateTtlMs: Long = Long.MaxValue)(
       implicit kEnc: Encoder[K], tEnc: Encoder[T]): Dataset[T] = {
     implicit val stateEnc: Encoder[(Long, T)] =
       Encoders.tuple(Encoders.scalaLong, tEnc)
     ds.groupByKey(keyFn)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
+      .flatMapGroupsWithState(OutputMode.Update,
+          IdleStateTtl.timeout(stateTtlMs)) {
         (_: K, rows: Iterator[T], state: GroupState[(Long, T)]) =>
-          val prev = state.getOption
-          var cur = prev
-          rows.foreach { r =>
-            val s = seqFn(r)
-            if (cur.isEmpty || s >= cur.get._1) cur = Some((s, r))
-          }
-          cur match {
-            case Some(c) if prev.isEmpty || prev.get._1 != c._1 ||
-                prev.get._2 != c._2 =>
-              state.update(c)
-              Iterator.single(c._2)
-            case _ => Iterator.empty
+          IdleStateTtl(state, stateTtlMs) {
+            val prev = state.getOption
+            var cur = prev
+            rows.foreach { r =>
+              val s = seqFn(r)
+              if (cur.isEmpty || s >= cur.get._1) cur = Some((s, r))
+            }
+            cur match {
+              case Some(c) if prev.isEmpty || prev.get._1 != c._1 ||
+                  prev.get._2 != c._2 =>
+                state.update(c)
+                Iterator.single(c._2)
+              case _ => Iterator.empty
+            }
           }
       }
   }
 
   /** Deduplicate keep-first: emit only the first row ever seen per key —
-    * Flink's deduplication with keep-first-row on PROCESSING time.
-    * O(1) state (a presence marker per key); later duplicates are
-    * swallowed. When several rows of a new key land in the SAME
-    * micro-batch their order after the shuffle is arbitrary, so which
-    * one survives is too — exactly Flink's proctime keep-first
-    * semantics; use the `seqFn` overload for a deterministic pick.
+    * Flink's deduplication with keep-first-row. O(1) state (a presence
+    * marker per key); later duplicates are swallowed. Among same-key
+    * rows of the key's first micro-batch the LOWEST `seqFn` value wins
+    * (event-time keep-first), so reruns and task retries emit the same
+    * survivor. With the default constant `seqFn` the first row of the
+    * batch wins, and that order after the shuffle is arbitrary —
+    * exactly Flink's proctime keep-first semantics.
     * The streaming face of exact corpus dedup: key on the normalized
     * text hash. */
-  def keepFirst[K, T](ds: Dataset[T], keyFn: T => K)(
-      implicit kEnc: Encoder[K], tEnc: Encoder[T]): Dataset[T] = {
-    implicit val boolEnc: Encoder[Boolean] = Encoders.scalaBoolean
-    ds.groupByKey(keyFn)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (_: K, rows: Iterator[T], state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty
-          else { state.update(true); rows.take(1) }
-      }
-  }
-
-  /** [[keepFirst]] with a deterministic within-batch tiebreak: among
-    * same-key rows of one micro-batch the LOWEST `seqFn` value wins
-    * (event-time keep-first on the first-arriving batch), so reruns and
-    * task retries emit the same survivor. */
-  def keepFirst[K, T](ds: Dataset[T], keyFn: T => K, seqFn: T => Long)(
+  def keepFirst[K, T](ds: Dataset[T], keyFn: T => K,
+      seqFn: T => Long = (_: T) => 0L)(
       implicit kEnc: Encoder[K], tEnc: Encoder[T]): Dataset[T] = {
     implicit val boolEnc: Encoder[Boolean] = Encoders.scalaBoolean
     ds.groupByKey(keyFn)
@@ -127,42 +126,6 @@ object StatefulOps {
           }
           state.update((windowIdx, buf))
           out.iterator
-      }
-  }
-
-  /** Keep-last dedup with state TTL (reference StateTtlConfig,
-    * flink-core/.../state/StateTtlConfig.java, OnReadAndWrite
-    * visibility): state older than `ttlMs` of processing time is treated
-    * as absent on next access — lazy expiry, exactly the reference's
-    * read-visibility TTL. (Timer-based eager cleanup belongs to the
-    * state store; Spark's ProcessingTimeTimeout covers it but interacts
-    * poorly with synchronous test harnesses, so expiry here is lazy.)
-    * State tuple: (lastTouchedWallClock, seq, row). */
-  def keepLastWithTtl[K, T](ds: Dataset[T], keyFn: T => K, seqFn: T => Long,
-      ttlMs: Long)(
-      implicit kEnc: Encoder[K], tEnc: Encoder[T]): Dataset[T] = {
-    implicit val stateEnc: Encoder[(Long, Long, T)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, tEnc)
-    ds.groupByKey(keyFn)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (_: K, rows: Iterator[T], state: GroupState[(Long, Long, T)]) =>
-          val now = System.currentTimeMillis()
-          val prev = state.getOption.filter(s => now - s._1 <= ttlMs)
-            .map(s => (s._2, s._3))
-          var cur = prev
-          rows.foreach { r =>
-            val s = seqFn(r)
-            if (cur.isEmpty || s >= cur.get._1) cur = Some((s, r))
-          }
-          cur match {
-            case Some(c) if prev != cur =>
-              state.update((now, c._1, c._2))
-              Iterator.single(c._2)
-            case Some(c) =>
-              state.update((now, c._1, c._2)) // touch
-              Iterator.empty
-            case None => Iterator.empty
-          }
       }
   }
 
@@ -320,4 +283,38 @@ object StatefulOps {
           out.iterator
       }
   }
+}
+
+/** Idle state retention — the reference's StateTtlConfig /
+  * table.exec.state.ttl — for the `flatMapGroupsWithState` operators
+  * that take a `stateTtlMs` ([[StatefulOps.keepLast]],
+  * [[StreamingChangelogJoin.join]], [[StreamingChangelogAgg.updateStream]]).
+  * The one statement of the rule: a key whose state sees no input for
+  * the TTL (processing time) times out and is removed SILENTLY — no
+  * emission, no retraction — and a later input runs against empty
+  * state. Every call with input re-arms the timer while the key keeps
+  * state (Spark clears a processing-time timeout whenever the function
+  * runs for a key). Long.MaxValue = no TTL: the plan has no timeout.
+  *
+  * Spark runs batches continuously while processing-time timeouts are
+  * registered (shouldRunAnotherBatch) — pair a TTL with a
+  * processing-time trigger to bound the idle batch rate. */
+private[streaming] object IdleStateTtl {
+
+  def timeout(stateTtlMs: Long): GroupStateTimeout =
+    if (stateTtlMs == Long.MaxValue) GroupStateTimeout.NoTimeout
+    else GroupStateTimeout.ProcessingTimeTimeout
+
+  /** One call of a key's function: drop the key if it timed out,
+    * otherwise run `body` (which does its state work before it returns)
+    * and re-arm the timer if the key still holds state. */
+  def apply[S, O](state: GroupState[S], stateTtlMs: Long)(
+      body: => Iterator[O]): Iterator[O] =
+    if (state.hasTimedOut) { state.remove(); Iterator.empty }
+    else {
+      val out = body
+      if (stateTtlMs != Long.MaxValue && state.exists)
+        state.setTimeoutDuration(stateTtlMs)
+      out
+    }
 }

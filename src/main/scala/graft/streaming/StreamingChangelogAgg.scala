@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, OutputMode}
 
 /** Streaming twin of [[graft.cdc.ChangelogAgg.updateStream]] — the
   * per-change UPDATE STREAM of a running grouped COUNT/SUM over a
@@ -34,10 +34,8 @@ object StreamingChangelogAgg {
     * key's accumulator untouched for the TTL (processing time) is
     * dropped; a later change starts from zero and re-emits +I, the
     * reference's documented expired-state behavior. Default
-    * Long.MaxValue = keep forever.
-    * Spark runs batches continuously while processing-time timeouts
-    * are registered (shouldRunAnotherBatch) — pair a TTL with a
-    * processing-time trigger to bound the idle batch rate. */
+    * Long.MaxValue = keep forever. The expiry rule is
+    * [[IdleStateTtl]]'s. */
   def updateStream[K](ds: Dataset[(K, Double, String, Long)],
       emitUpdateBefore: Boolean = true,
       stateTtlMs: Long = Long.MaxValue)(
@@ -45,44 +43,35 @@ object StreamingChangelogAgg {
       inEnc: Encoder[(K, Double, String, Long)],
       stEnc: Encoder[(Long, Double)],
       outEnc: Encoder[(K, Long, Double, String, Long)])
-      : Dataset[(K, Long, Double, String, Long)] = {
-    val timeoutConf =
-      if (stateTtlMs == Long.MaxValue) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.ProcessingTimeTimeout
+      : Dataset[(K, Long, Double, String, Long)] =
     ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
+      .flatMapGroupsWithState(OutputMode.Append,
+          IdleStateTtl.timeout(stateTtlMs)) {
         (key: K, rows: Iterator[(K, Double, String, Long)],
             state: GroupState[(Long, Double)]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-          var (cnt, sum) = state.getOption.getOrElse((0L, 0.0))
-          val out =
-            scala.collection.mutable.ArrayBuffer
-              .empty[(K, Long, Double, String, Long)]
-          rows.toSeq.sortBy(_._4).foreach { case (_, v, kind, seq) =>
-            val w = graft.cdc.ChangelogAgg.weightOf(kind)
-            val (pc, ps) = (cnt, sum)
-            cnt += w
-            sum += w * v
-            if (pc > 0) {
-              val retKind = if (cnt > 0) "-U" else "-D"
-              // DropUpdateBefore keeps deaths visible as -D
-              if (emitUpdateBefore || retKind == "-D")
-                out += ((key, pc, ps, retKind, seq * 2))
+          IdleStateTtl(state, stateTtlMs) {
+            var (cnt, sum) = state.getOption.getOrElse((0L, 0.0))
+            val out =
+              scala.collection.mutable.ArrayBuffer
+                .empty[(K, Long, Double, String, Long)]
+            rows.toSeq.sortBy(_._4).foreach { case (_, v, kind, seq) =>
+              val w = graft.cdc.ChangelogAgg.weightOf(kind)
+              val (pc, ps) = (cnt, sum)
+              cnt += w
+              sum += w * v
+              if (pc > 0) {
+                val retKind = if (cnt > 0) "-U" else "-D"
+                // DropUpdateBefore keeps deaths visible as -D
+                if (emitUpdateBefore || retKind == "-D")
+                  out += ((key, pc, ps, retKind, seq * 2))
+              }
+              if (cnt > 0) {
+                val addKind = if (pc <= 0) "+I" else "+U"
+                out += ((key, cnt, sum, addKind, seq * 2 + 1))
+              }
             }
-            if (cnt > 0) {
-              val addKind = if (pc <= 0) "+I" else "+U"
-              out += ((key, cnt, sum, addKind, seq * 2 + 1))
-            }
-          }
-          if (cnt == 0L) state.remove()
-          else {
-            state.update((cnt, sum))
-            if (stateTtlMs != Long.MaxValue)
-              state.setTimeoutDuration(stateTtlMs)
-          }
-          out.iterator
+            if (cnt == 0L) state.remove() else state.update((cnt, sum))
+            out.iterator
           }
       }
-  }
 }

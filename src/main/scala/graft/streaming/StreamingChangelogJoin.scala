@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, OutputMode}
 
 import graft.cdc.ChangelogJoinKernel
 
@@ -54,10 +54,8 @@ object StreamingChangelogJoin {
     * cardinality. As in the reference, this deliberately trades
     * correctness for boundedness: a change arriving after its key
     * expired joins against EMPTY state (documented Flink behavior).
-    * Default Long.MaxValue = keep state forever.
-    * Spark runs batches continuously while processing-time timeouts
-    * are registered (shouldRunAnotherBatch) — pair a TTL with a
-    * processing-time trigger to bound the idle batch rate. */
+    * Default Long.MaxValue = keep state forever. The expiry rule is
+    * [[IdleStateTtl]]'s. */
   def join[K, L, R](left: Dataset[(L, String, Long)],
       right: Dataset[(R, String, Long)],
       lKey: L => K, rKey: R => K, joinType: String,
@@ -71,14 +69,12 @@ object StreamingChangelogJoin {
     val tagged = left
       .map(l => (Option(l), Option.empty[(R, String, Long)]))
       .unionByName(right.map(r => (Option.empty[(L, String, Long)], Option(r))))
-    val timeoutConf =
-      if (stateTtlMs == Long.MaxValue) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.ProcessingTimeTimeout
     tagged.groupByKey {
       case (Some((l, _, _)), _) => lKey(l)
       case (_, Some((r, _, _))) => rKey(r)
       case _ => throw new IllegalStateException("empty tagged row")
-    }.flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+    }.flatMapGroupsWithState(OutputMode.Append,
+        IdleStateTtl.timeout(stateTtlMs))(
       applyKey[K, L, R](joinType, stateTtlMs) _)
   }
 
@@ -89,10 +85,7 @@ object StreamingChangelogJoin {
   private[streaming] def applyKey[K, L, R](joinType: String, stateTtlMs: Long)(
       key: K, rows: Iterator[(Option[(L, String, Long)], Option[(R, String, Long)])],
       state: GroupState[(Seq[(L, Int)], Seq[(R, Int)])]): Iterator[Out[L, R]] =
-    if (state.hasTimedOut) { // TTL expiry: drop silently (reference
-      state.remove()         // StateTtlConfig semantics — no
-      Iterator.empty         // retractions for expired state)
-    } else {
+    IdleStateTtl(state, stateTtlMs) {
       val (ls0, rs0) = state.getOption.filter(_ => key != null)
         .getOrElse((Seq.empty[(L, Int)], Seq.empty[(R, Int)]))
       val kernel = new ChangelogJoinKernel[L, R](joinType, key == null,
@@ -108,12 +101,7 @@ object StreamingChangelogJoin {
         kernel(change, kind) { (k, l, r, n) =>
           (1 to n).foreach(_ => out += ((k, l, r))) }
       }
-      if (kernel.isEmpty) state.remove()
-      else {
-        state.update(kernel.state)
-        if (stateTtlMs != Long.MaxValue)
-          state.setTimeoutDuration(stateTtlMs)
-      }
+      if (kernel.isEmpty) state.remove() else state.update(kernel.state)
       out.iterator
     }
 }

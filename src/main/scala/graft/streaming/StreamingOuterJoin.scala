@@ -29,6 +29,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Keys are hash-distributed; each micro-batch touches only arriving
   * keys. One shuffle per side on the join key — the minimum any
   * streaming join does.
+  *
+  * A null join key never matches (SQL equality): its rows only pad and
+  * it keeps no state.
   */
 object StreamingOuterJoin {
 
@@ -52,36 +55,53 @@ object StreamingOuterJoin {
       case (_, Some(r)) => rKey(r)
       case _ => throw new IllegalStateException("empty tagged row")
     }.flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-      (_: K, rows: Iterator[(Option[L], Option[R])],
+      (key: K, rows: Iterator[(Option[L], Option[R])],
           state: GroupState[(Seq[(L, Long)], Seq[(R, Long)])]) =>
-        val now = System.currentTimeMillis()
-        val fresh = (p: (_, Long)) =>
-          stateTtlMs == Long.MaxValue || now - p._2 < stateTtlMs
-        var (ls, rs) = state.getOption.getOrElse(
-          (Seq.empty[(L, Long)], Seq.empty[(R, Long)]))
-        ls = ls.filter(fresh); rs = rs.filter(fresh) // lazy TTL expiry
-        val out = scala.collection.mutable.ArrayBuffer.empty[Out[L, R]]
-        rows.foreach {
-          case (Some(l), _) =>
-            if (rs.nonEmpty)
-              rs.foreach { case (r, _) => out += (("+I", Some(l), Some(r))) }
-            else if (padLeft) out += (("+I", Some(l), None))
-            // right side that was null-padded (no left existed) retracts
-            if (padRight && ls.isEmpty && rs.nonEmpty)
-              rs.foreach { case (r, _) => out += (("-D", None, Some(r))) }
-            ls = ls :+ ((l, now))
-          case (_, Some(r)) =>
-            if (ls.nonEmpty)
-              ls.foreach { case (l, _) => out += (("+I", Some(l), Some(r))) }
-            else if (padRight) out += (("+I", None, Some(r)))
-            // left rows that were null-padded retract their padding
-            if (padLeft && rs.isEmpty && ls.nonEmpty)
-              ls.foreach { case (l, _) => out += (("-D", Some(l), None)) }
-            rs = rs :+ ((r, now))
-          case _ => ()
+        if (key == null) nullKey(rows, state, padLeft, padRight)
+        else {
+          val now = System.currentTimeMillis()
+          val fresh = (p: (_, Long)) =>
+            stateTtlMs == Long.MaxValue || now - p._2 < stateTtlMs
+          var (ls, rs) = state.getOption.getOrElse(
+            (Seq.empty[(L, Long)], Seq.empty[(R, Long)]))
+          ls = ls.filter(fresh); rs = rs.filter(fresh) // lazy TTL expiry
+          val out = scala.collection.mutable.ArrayBuffer.empty[Out[L, R]]
+          rows.foreach {
+            case (Some(l), _) =>
+              if (rs.nonEmpty)
+                rs.foreach { case (r, _) => out += (("+I", Some(l), Some(r))) }
+              else if (padLeft) out += (("+I", Some(l), None))
+              // right side that was null-padded (no left existed) retracts
+              if (padRight && ls.isEmpty && rs.nonEmpty)
+                rs.foreach { case (r, _) => out += (("-D", None, Some(r))) }
+              ls = ls :+ ((l, now))
+            case (_, Some(r)) =>
+              if (ls.nonEmpty)
+                ls.foreach { case (l, _) => out += (("+I", Some(l), Some(r))) }
+              else if (padRight) out += (("+I", None, Some(r)))
+              // left rows that were null-padded retract their padding
+              if (padLeft && rs.isEmpty && ls.nonEmpty)
+                ls.foreach { case (l, _) => out += (("-D", Some(l), None)) }
+              rs = rs :+ ((r, now))
+            case _ => ()
+          }
+          state.update((ls, rs))
+          out.iterator
         }
-        state.update((ls, rs))
-        out.iterator
+    }
+  }
+
+  /** Rows under a null join key: a null key never matches, so each row
+    * only pads (under `padLeft`/`padRight`) and the key keeps no state —
+    * state stored under it by an earlier version, which joined null
+    * keys with each other, is dropped. */
+  private def nullKey[L, R](rows: Iterator[(Option[L], Option[R])],
+      state: GroupState[_], padLeft: Boolean, padRight: Boolean)
+      : Iterator[Out[L, R]] = {
+    if (state.exists) state.remove()
+    rows.collect {
+      case (l @ Some(_), _) if padLeft => ("+I", l, Option.empty[R])
+      case (None, r @ Some(_)) if padRight => ("+I", Option.empty[L], r)
     }
   }
 

@@ -117,7 +117,9 @@ object Watermarks {
   /** Annotate each row with the watermark the stateful operator observed
     * when processing it — the in-query CURRENT_WATERMARK() analogue
     * (e.g. to measure lateness or route near-late rows). Keyed so state
-    * machinery engages; emits (row, watermarkMs) in update mode. */
+    * machinery engages, but it stores no state (like its
+    * transformWithState twin [[withCurrentWatermarkTws]]); emits
+    * (row, watermarkMs) in update mode. */
   def withCurrentWatermark[K, T](ds: Dataset[T], keyFn: T => K)(
       implicit kEnc: Encoder[K], tEnc: Encoder[T],
       outEnc: Encoder[(T, Long)]): Dataset[(T, Long)] = {
@@ -127,7 +129,6 @@ object Watermarks {
         (_: K, rows: Iterator[T],
             state: org.apache.spark.sql.streaming.GroupState[Long]) =>
           val wm = state.getCurrentWatermarkMs()
-          state.update(wm)
           rows.map(r => (r, wm))
       }
   }

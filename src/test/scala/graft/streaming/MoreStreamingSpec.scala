@@ -96,29 +96,6 @@ class MoreStreamingSpec extends SparkSpec {
     assert(out("k3") == (0, 30))
   }
 
-  test("keepLastWithTtl dedups while live, expires idle state lazily") {
-    implicit val sq = spark.sqlContext
-    val in = MemoryStream[WEv]
-    val out = StatefulOps.keepLastWithTtl[String, WEv](
-      in.toDS(), _.k, _.ts, ttlMs = 8000)
-    val q = out.writeStream.format("memory").queryName("ttl")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      in.addData(WEv("a", 5000, 5, new Timestamp(5000)))
-      q.processAllAvailable()
-      // stale row must NOT override while state is live
-      in.addData(WEv("a", 1000, 1, new Timestamp(1000)))
-      q.processAllAvailable()
-      Thread.sleep(9000) // exceed the 8s TTL
-      // same stale row now re-emits: prior state expired
-      in.addData(WEv("a", 1000, 1, new Timestamp(1000)))
-      q.processAllAvailable()
-      val got = spark.table("ttl").as[WEv].collect().filter(_.k == "a")
-        .map(_.ts)
-      assert(got.toSeq == Seq(5000L, 1000L))
-    } finally q.stop()
-  }
-
   test("broadcast-state pattern: stream-static join re-reads dim per batch") {
     implicit val sq = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-dim").toString

@@ -87,6 +87,9 @@ class RangeOverWatermarkSpec extends SparkSpec {
       val rows = spark.table("wm_annot").as[(Long, Long)].collect().toMap
       assert(rows(5000L) == 0L)     // first batch: watermark not advanced yet
       assert(rows(6000L) == 5000L)  // second batch sees wm = max(batch1 ts)
+      // the annotator is stateless: no state row per key
+      assert(q.lastProgress.stateOperators.map(_.numRowsTotal).toSeq ==
+        Seq(0L))
       // driver-side observability surface (progress commits lag a batch)
       assert(Watermarks.currentWatermarkMs(q).exists(_ >= 5000L))
     } finally q.stop()

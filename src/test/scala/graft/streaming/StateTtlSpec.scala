@@ -1,12 +1,15 @@
 package graft.streaming
 
+import java.sql.Timestamp
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.SparkSpec
 
 /** Idle state retention (the reference's table.exec.state.ttl /
-  * StateTtlConfig) on the changelog streaming operators: a key whose
+  * StateTtlConfig) on the operators that share `IdleStateTtl` — the
+  * changelog join and aggregate and keep-last dedup: a key whose
   * state sees no change for the TTL is dropped SILENTLY (no
   * retractions), and a later change runs against empty state — the
   * reference's documented expired-state behavior, the deliberate
@@ -114,6 +117,56 @@ class StateTtlSpec extends SparkSpec {
       // -U(1,5)/+U(2,12) against the old accumulator
       assert(kRows == Set((1L, 5.0, "+I"), (1L, 7.0, "+I")),
         kRows.toString)
+    } finally q.stop()
+  }
+
+  test("keepLast(stateTtlMs) dedups while live, re-emits after expiry") {
+    implicit val sq = spark.sqlContext
+    val in = MemoryStream[WEv]
+    val out = StatefulOps.keepLast[String, WEv](
+      in.toDS(), _.k, _.ts, stateTtlMs = 2000L)
+    val q = out.writeStream.format("memory").queryName("ttl_keeplast")
+      .outputMode(OutputMode.Update())
+      .trigger(Trigger.ProcessingTime("100 milliseconds"))
+      .start()
+    try {
+      in.addData(WEv("a", 5000, 5, new Timestamp(5000)))
+      awaitCount("ttl_keeplast", 1)
+      // a stale row must NOT override while the state is live
+      in.addData(WEv("a", 1000, 1, new Timestamp(1000)))
+      awaitProgress(q, "stale row processed")(_ =>
+        q.recentProgress.map(_.numInputRows).sum >= 2)
+      assert(spark.table("ttl_keeplast").count() == 1)
+      // poll for the timeout batch, not the wall clock
+      awaitProgress(q, "keep-last state expired")(stateRows(_) == 0)
+      // the same stale row now re-emits: the prior state expired
+      in.addData(WEv("a", 1000, 1, new Timestamp(1000)))
+      awaitCount("ttl_keeplast", 2)
+      val got = spark.table("ttl_keeplast").as[WEv].collect()
+        .filter(_.k == "a").map(_.ts)
+      assert(got.toSeq == Seq(5000L, 1000L))
+    } finally q.stop()
+  }
+
+  test("keepLast(stateTtlMs): a key that never gets another row leaves state") {
+    implicit val sq = spark.sqlContext
+    val in = MemoryStream[Ev]
+    val out = StatefulOps.keepLast[String, Ev](
+      in.toDS(), _.k, _.seq, stateTtlMs = 500L)
+    val q = out.writeStream.format("memory").queryName("ttl_keeplast_idle")
+      .outputMode(OutputMode.Update())
+      .trigger(Trigger.ProcessingTime("100 milliseconds"))
+      .start()
+    try {
+      in.addData(Ev("a", 1, 1.0), Ev("b", 2, 2.0))
+      awaitCount("ttl_keeplast_idle", 2)
+      // neither key gets another row: the timeout alone must remove them
+      awaitProgress(q, "idle keys removed")(stateRows(_) == 0)
+      assert(q.recentProgress.exists(stateRows(_) == 2))
+      awaitBatches(q, 3)
+      // expiry is silent: nothing emitted beyond the two first rows
+      assert(spark.table("ttl_keeplast_idle").as[Ev].collect().toSet ==
+        Set(Ev("a", 1, 1.0), Ev("b", 2, 2.0)))
     } finally q.stop()
   }
 

@@ -37,6 +37,39 @@ class StatefulOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("keepLast dedups per key under the RocksDB state store provider") {
+    implicit val sq = spark.sqlContext
+    val prevProvider =
+      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val in = MemoryStream[Ev]
+    val out = StatefulOps.keepLast[String, Ev](in.toDS(), _.k, _.seq)
+    val q = out.writeStream.format("memory").queryName("kl_rocksdb")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("kl-rocksdb-ckpt").toString)
+      .outputMode(OutputMode.Update())
+      .start()
+    try {
+      in.addData(Ev("a", 1, 1.0), Ev("a", 3, 3.0))
+      q.processAllAvailable()
+      in.addData(Ev("a", 2, 2.0)) // stale
+      in.addData(Ev("b", 7, 7.0))
+      q.processAllAvailable()
+      val rows = spark.table("kl_rocksdb").as[Ev].collect()
+      val latest = rows.groupBy(_.k).map { case (k, rs) => k -> rs.last.seq }
+      assert(latest("a") == 3 && latest("b") == 7)
+    } finally {
+      q.stop()
+      prevProvider match {
+        case Some(p) =>
+          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
+        case None =>
+          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
+    }
+  }
+
   test("topN maintains per-key ranking in state") {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[Ev]

@@ -6,6 +6,8 @@ import org.apache.spark.sql.streaming.OutputMode
 
 case class LRow(k: Long, lv: String)
 case class RRow(k: Long, rv: String)
+case class SLRow(k: String, lv: String)
+case class SRRow(k: String, rv: String)
 
 class StreamingOuterJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -73,6 +75,42 @@ class StreamingOuterJoinSpec extends SparkSpec {
       .select($"lv", $"rv").collect()
       .map(r => (Option(r.getString(0)), Option(r.getString(1)))).toSet
     assert(mat == expected)
+  }
+
+  test("null keys never join each other: their rows only pad (full and left outer)") {
+    implicit val sq = spark.sqlContext
+    val lefts = Seq(SLRow(null, "ln1"), SLRow("a", "la"), SLRow(null, "ln2"))
+    val rights = Seq(SRRow(null, "rn1"), SRRow("a", "ra"), SRRow(null, "rn2"))
+    Seq("full_outer" -> true, "left_outer" -> false).foreach {
+      case (jt, padRight) =>
+        val l = MemoryStream[SLRow]
+        val r = MemoryStream[SRRow]
+        val name = s"soj_null_$jt"
+        val q = StreamingOuterJoin.outer[String, SLRow, SRRow](
+            l.toDS(), r.toDS(), _.k, _.k, padLeft = true, padRight = padRight)
+          .writeStream.format("memory").queryName(name)
+          .outputMode(OutputMode.Update()).start()
+        try {
+          // one side per trigger, then both null keys in one trigger
+          l.addData(lefts(0)); q.processAllAvailable()
+          r.addData(rights(0)); q.processAllAvailable()
+          l.addData(lefts(1)); q.processAllAvailable()
+          r.addData(rights(1)); q.processAllAvailable()
+          l.addData(lefts(2)); r.addData(rights(2)); q.processAllAvailable()
+        } finally q.stop()
+        val em = spark.table(name)
+          .as[(String, Option[SLRow], Option[SRRow])].collect().toSeq
+        assert(!em.exists { case (_, lo, ro) =>
+          lo.exists(_.k == null) && ro.nonEmpty }, s"$jt: $em")
+        val mat = StreamingOuterJoin.materialize(em)
+          .map { case (lo, ro) => (lo.map(_.lv), ro.map(_.rv)) }.sorted
+        val expected = lefts.toDF("k", "lv")
+          .join(rights.toDF("k2", "rv"), $"k" === $"k2", jt)
+          .select($"lv", $"rv").collect()
+          .map(r => (Option(r.getString(0)), Option(r.getString(1))))
+          .toSeq.sorted
+        assert(mat == expected, s"$jt: $em")
+    }
   }
 
   test("state TTL expires stale rows so late arrivals re-pad") {
